@@ -13,7 +13,7 @@
 # sbt fail — the gate was inert (r9 advice, verified by shell repro).
 # Now sbt writes to a log file and its OWN exit status is propagated.
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 LOG=/tmp/graft_smoke.log
 if sbt -batch "testOnly graft.SimSpec graft.DocSyncSpec" >"$LOG" 2>&1; then
   tail -5 "$LOG"

@@ -1,26 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Each query is forced to full materialization by
-  * hashing every output column (xxhash64 over a struct of all columns,
-  * summed) — a bare count() would let Catalyst prune projections and skip
-  * the very expressions we are timing. Failures are reported per-query
-  * (elapsed = -1, error message recorded), never swallowed as successes.
+import java.nio.file.{Files, Paths}
+
+/** Benchmark main: runs every registered query (or the `SPARK_GRAFT_ONLY`
+  * subset) at SPARK_GRAFT_SF_DIR on a [[Harness]] session, each forced to
+  * full materialization by [[Harness.force]], and prints ONE JSON line.
+  * Failures are reported per-query (elapsed = -1, error message
+  * recorded), never swallowed as successes.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark) // parquet timestamp conf, one owner (Sessions)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
 
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -28,12 +20,7 @@ object Bench {
     }
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run to the named queries (local
-    // iteration aid); absent/empty = full suite, which is what the driver runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-      .filter(_.nonEmpty)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = Harness.selected
     // Each query runs REPS times (default 3) and the reported number is
     // the MIN of the warm reps (2..N): the first rep pays Janino/JIT
     // compilation of the whole plan (4-8 s of pure cold-start on the
@@ -46,20 +33,16 @@ object Bench {
     // cleared between reps, so a warm rep re-executes everything except
     // JVM compilation — it measures the operator, not the cache.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    // One timed, fully-materialized execution. Forces every output
-    // column: hash the full row, XOR the hashes (order-independent; no
-    // ANSI overflow, unlike sum). Returns -1 and records the error on
-    // failure.
-    def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // One timed, fully-materialized execution. Returns -1 and records
+    // the error on failure.
+    def timedRun(d: QueryDef): Double = {
       val t0 = System.nanoTime()
       try {
-        val df = fn(spark, sfDir)
-        df.agg(expr(s"bit_xor(xxhash64(${df.columns.map(c => s"`$c`").mkString(",")}))"))
-          .collect()
+        Harness.force(d.run(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          errors(d.name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           -1.0
       } finally {
         // Queries run back-to-back in ONE JVM: any cached plan or
@@ -67,171 +50,63 @@ object Bench {
         // later query (round-3 verdict measured a ~20× blowup from
         // accumulated blocks). Start each query with a clean block
         // manager, like a fresh session would.
-        Bench.clearSessionState(spark)
+        Harness.clear(spark)
       }
     }
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to reps).map(_ => timedRun(name, fn))
+    val results = selected.map { d =>
+      val times = (1 to reps).map(_ => timedRun(d))
       // min over the warm reps that succeeded; -1 only if they all failed
       val warmReps = (if (times.size > 1) times.tail else times).filter(_ >= 0)
-      (name, times.head, if (warmReps.isEmpty) -1.0 else warmReps.min)
+      (d, times.head, if (warmReps.isEmpty) -1.0 else warmReps.min)
     }
-    // r12 verdict ask #2, automated adjudication of the heavy tail: the
-    // in-suite number for the slowest queries drifts with suite
-    // contention (dedup_simhash measured 8.56 s in-suite vs 2.48 s solo
-    // in r12 — a 3.5× band on code that got FASTER). After the full
-    // suite, re-measure the N slowest queries "solo" — min of 3 quiesced
-    // reps at the END of the run, when no other query's cleanup overlaps
-    // — and ship BOTH numbers, so a cross-round delta is read against
-    // the solo number that adjudicates it. Same-JVM solo is the honest
-    // local stand-in for a fresh process: clearSessionState + GC between
-    // reps removes the block-manager/contention component, which the r12
-    // hand probes (interleaved A/B, min-of-9) showed is the entire gap.
+    // The in-suite number for the slowest queries drifts with suite
+    // contention (dedup_simhash once measured 8.56 s in-suite vs 2.48 s
+    // solo). After the full suite, re-measure the N slowest queries
+    // "solo" — min of 3 quiesced reps at the END of the run, when no
+    // other query's cleanup overlaps — and ship BOTH numbers, so a
+    // delta between two artifacts is read against the solo number.
     val soloN = math.max(0, sys.env.getOrElse("SPARK_GRAFT_SOLO_N", "10").toInt)
-    val fnByName = selected.toMap
     val solo = results.filter(_._3 >= 0).sortBy(-_._3).take(soloN).map {
-      case (name, _, _) =>
-        val ts = (1 to 3).map(_ => timedRun(name, fnByName(name))).filter(_ >= 0)
-        (name, if (ts.isEmpty) -1.0 else ts.min)
+      case (d, _, _) =>
+        val ts = (1 to 3).map(_ => timedRun(d)).filter(_ >= 0)
+        (d.name, if (ts.isEmpty) -1.0 else ts.min)
     }
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, _, w) => "\"" + esc(k) + "\":" + r3(w) }
-      .mkString("{", ",", "}")
-    val cold = results.map { case (k, c, _) => "\"" + esc(k) + "\":" + r3(c) }
-      .mkString("{", ",", "}")
-    val soloJson = solo.map { case (k, v) => "\"" + esc(k) + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (d, _, w) => d.name -> r3(w).toString })
+    val cold = obj(results.map { case (d, c, _) => d.name -> r3(c).toString })
+    val soloJson = obj(solo.map { case (k, v) => k -> r3(v).toString })
+    val errJson = obj(errors.toSeq.map { case (k, v) => k -> ("\"" + esc(v) + "\"") })
     val total = results.collect { case (_, _, w) if w >= 0 => w }.sum
-    // Evaluator queries run MORE THAN ONE full pipeline by definition
-    // (candidates + exact ground truth); annotate so their totals are
-    // read as N-pipeline costs, not single-operator regressions.
-    val pipelinesRun = Map("dedup_eval" -> 2, "block_eval" -> 2,
-      "ann_recall_eval" -> 7,
-      // admission control runs the full MinHash banding pipeline on
-      // BOTH sides (corpus index + arriving stream) inside one
-      // streaming query — a 2-pipeline cost by definition
-      "stream_neardup" -> 2,
-      // theta overlap ships the sketch agg AND the exact-face
-      // shingle-grouped agg (evaluator idiom, like dedup_eval)
-      "profile_theta_overlap" -> 2,
-      // SQ8 search runs its exact micro-L2 ground truth alongside
-      // (rank-aligned output + recall@5 by definition)
-      "ann_sq8" -> 2,
-      // sketch estimators whose exact faces ride along by definition
-      "profile_join_size_est" -> 2,
-      "stream_quantile" -> 2,
-      // reads the events source as TWO independent streaming sides
-      // of one stream-stream join — a 2-source cost by definition
-      "stream_interval_join" -> 2)
-    val prJson = pipelinesRun.toSeq.sorted
-      .map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
-    // Adjudications of cross-round movers, carried in the artifact so
-    // a delta vs an old round's number is read against the probe that
-    // explained it (the r10 stream_asof precedent). r12: the r11
-    // dedup/cluster "regression cluster" was probed solo (SimhashProbe
-    // + interleaved same-box A/B builds of the r10 tree a383077 vs
-    // HEAD, min of 9 warm reps): dedup_simhash measured 2.68 s on the
-    // r10 TREE vs 2.95 s on HEAD (1.10x, within noise) and
-    // pipeline_data_e2e 2.30 s vs 1.95-2.06 s (HEAD faster) — so the
-    // r10_full 1.46/1.35 s numbers came from a quieter driver box, not
-    // from code that later regressed. dedup_simhash was then made
-    // genuinely faster (hamming filter BEFORE the pair distinct:
-    // 2.95 -> 2.48 s solo, beating the r10 tree on the same box).
-    val probeNotes = Map(
-      "dedup_simhash" -> ("r12 A/B vs r10 tree: no code regression (2.68 vs 2.95 " +
-        "same box); then filter-before-distinct cut it to 2.48 solo"),
-      "pipeline_data_e2e" -> ("r12 A/B vs r10 tree: HEAD faster (1.95-2.06 vs " +
-        "2.30 same box); r10_full 1.35 was a quieter driver box"),
-      "ann_filtered" -> ("untouched since r11; r12 solo min-of-9 = 0.70 s, " +
-        "faster than r11's 1.00 — any in-suite delta is contention"),
-      "io_partitioned" -> ("untouched since r11; r12 solo min-of-9 = 0.81 s, " +
-        "in-family with r11's 0.64 — any in-suite delta is contention"),
-      // r12 continuation: four untouched queries moved >1.5x between
-      // two same-session full runs; solo min-of-9 matched the earlier
-      // artifact within ~10%, so the in-suite numbers are contention
-      "dedup_incremental" -> ("untouched in the r12 continuation; solo " +
-        "min-of-9 = 3.08 s vs artifact 2.82 — in-suite 4.45 was contention"),
-      "fuse_schema_compare" -> ("untouched; solo min-of-9 = 1.83 s vs " +
-        "artifact 1.66 — in-suite 2.58 was contention"),
-      "fuse_truth_discovery" -> ("untouched; solo min-of-9 = 1.33 s vs " +
-        "artifact 1.17 — in-suite 2.28 was contention"),
-      "text_dsir" -> ("untouched; solo min-of-9 = 0.86 s vs artifact " +
-        "0.76 — in-suite 1.27 was contention"))
-    val pnJson = probeNotes.toSeq.sorted
-      .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
+    val prJson = obj(selected.filter(_.pipelines > 1).map(d => d.name -> d.pipelines.toString))
     val json =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cold":$cold,"solo":$soloJson,"errors":$errJson,"n_failed":${errors.size},"reps":$reps,"pipelines_run":$prJson,"probes":$pnJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cold":$cold,"solo":$soloJson,"errors":$errJson,"n_failed":${errors.size},"reps":$reps,"pipelines_run":$prJson,"cpus":$cpus,"sf":"${esc(sfDir)}"}"""
     println(json)
-    // Belt and braces: the driver captures stdout (which has been
-    // truncated in past rounds); persist the full artifact to a file too.
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), json + "\n")
-    catch { case _: Throwable => () }
-    // ...and as BENCH_r{N}_full.json, N inferred as (max committed
-    // BENCH_rNN) + 1: the driver's own BENCH_r{N}.json stdout capture
-    // arrived tail-truncated (parsed: null) in rounds 8 AND 9, so the
-    // judge had to fall back to BENCH_LAST. A full-suite run during
-    // round N sees BENCH_r{N-1}.json as the max and lands on N; only
-    // full runs stamp it (a SPARK_GRAFT_ONLY subset would overwrite the
-    // round's artifact with a partial one).
-    if (sys.env.get("SPARK_GRAFT_ONLY").isEmpty) try {
-      import scala.jdk.CollectionConverters._
-      val rx = "BENCH_r(\\d+)\\.json".r
-      val maxN = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-        .iterator().asScala
-        .flatMap(p => rx.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toInt))
-        .foldLeft(0)(math.max)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(f"BENCH_r${maxN + 1}%02d_full.json"), json + "\n")
-    } catch { case _: Throwable => () }
+    // Stdout captures have arrived truncated; persist the full artifact
+    // to a file too. A failed write throws: a bench that cannot record
+    // its result has not run.
+    Files.writeString(Paths.get("BENCH_LAST.json"), json + "\n")
     // Stop Spark BEFORE the compact line so its shutdown logging can't
     // trail the line in a 2>&1 capture.
     spark.stop()
-    // The driver captures only the LAST ~2000 chars of stdout and
-    // parses the LAST line as the bench JSON; the full artifact above
-    // is ~12 KB so rounds 8-10 arrived tail-truncated (parsed: null),
-    // and in r11 sbt's "[success]" epilogue trailed the summary (now
-    // suppressed via showSuccess := false + StdoutOutput in build.sbt).
-    // r13 verdict item 3 (per-query PERF contract): the final line now
-    // carries a "queries" map — the LARGEST time-sorted prefix of the
-    // per-query results that keeps the whole line under the 2000-char
-    // tail capture (~60 heaviest queries, the bulk of total seconds;
-    // a 277-entry map cannot physically fit — BENCH_r11..13's "tail"
-    // fields are exactly 2000 chars). "queries_omitted" counts the
-    // sub-threshold rest; the COMPLETE map is the penultimate stdout
-    // line and BENCH_LAST.json / BENCH_r*_full.json.
+    // A caller that keeps only the LAST ~2000 chars of stdout parses
+    // the LAST line as the bench JSON, so the final line carries
+    // "queries_top": the LARGEST time-sorted prefix of the per-query
+    // results that keeps the line under 1900 chars (a 277-entry map
+    // cannot fit). "queries_omitted" counts the rest; the COMPLETE map
+    // is the penultimate stdout line and BENCH_LAST.json.
     val byTime = results.filter(_._3 >= 0).sortBy(-_._3)
-      .map { case (k, _, w) => "\"" + esc(k) + "\":" + r3(w) }
+      .map { case (d, _, w) => "\"" + esc(d.name) + "\":" + r3(w) }
     def finalLine(n: Int): String = {
       val qmap = byTime.take(n).mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${errors.size},"reps":$reps,"sf":"$sfDir","queries":$qmap,"queries_omitted":${byTime.size - n},"solo":$soloJson,"full":"BENCH_LAST.json"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${errors.size},"reps":$reps,"cpus":$cpus,"sf":"${esc(sfDir)}","queries_top":$qmap,"queries_omitted":${byTime.size - n},"solo":$soloJson,"full":"BENCH_LAST.json"}"""
     }
-    var keep = byTime.size
-    while (keep > 0 && finalLine(keep).length > 1900) keep -= 1
+    // One pass over entry lengths: the empty-map line omits the most
+    // entries, so its count field is the widest; each kept entry adds
+    // its length plus a comma (one comma too many — a 1-char margin).
+    val keep = byTime.scanLeft(finalLine(0).length)(_ + _.length + 1).tail
+      .takeWhile(_ <= 1900).size
     println(finalLine(keep))
-  }
-
-  /** Drop every cached plan and persisted/checkpointed RDD block.
-    *
-    * Harness-only contract: call ONLY between fully-consumed queries
-    * (Bench/Verify/Probe do). Invoking it mid-pipeline discards
-    * localCheckpoint blocks backing still-live DataFrames (e.g. a held
-    * Dedup or connectedComponents output), whose lineage is truncated —
-    * later reads fail with missing-checkpoint-block errors, they cannot
-    * recompute. `private[graft]` enforces that this never becomes
-    * library API.
-    */
-  private[graft] def clearSessionState(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    // Spark's ContextCleaner releases shuffle files / broadcast blocks
-    // only when their weak references get collected — and a large heap
-    // may not GC for dozens of queries, so state from every prior query
-    // piles up until one giant mixed collection stalls whichever query
-    // happens to be running (observed as random 10-30 s spikes). One
-    // explicit GC per query keeps cleanup prompt and the cost bounded.
-    System.gc()
   }
 }

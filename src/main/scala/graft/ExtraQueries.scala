@@ -2283,116 +2283,65 @@ object ExtraQueries {
       |       CAST(sum(monetary_c) AS DOUBLE) / 100.0 AS revenue
       |FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_rfm" -> (eventsRfm _),
-    "events_pivot" -> (eventsPivot _),
-    "events_unpivot" -> (eventsUnpivot _),
-    "mine_itemsets" -> (mineItemsets _),
-    "mine_assoc_rules" -> (mineAssocRules _),
-    "events_markov" -> (eventsMarkov _),
-    "events_sessionize" -> (eventsSessionize _),
-    "events_attribution" -> (eventsAttribution _),
-    "events_rolling" -> (eventsRolling _),
-    "events_scd2" -> (eventsScd2 _),
-    "events_json" -> (eventsJson _),
-    "events_cube" -> (eventsCube _),
-    "events_anomaly" -> (eventsAnomaly _),
-    "events_retention" -> (eventsRetention _),
-    "events_funnel" -> (eventsFunnel _),
-    "asof_join_tol" -> (asofJoinTol _),
-    "asof_join_fwd" -> (asofJoinFwd _),
-    "asof_join_nearest" -> (asofJoinNearest _),
-    "asof_join_chunked" -> (asofJoinChunked _),
-    "interval_overlap" -> (intervalOverlap _),
-    "asof_join" -> (asofJoin _),
-    "join_dim_scd" -> (joinDimScd _),
-    "stream_scd2_enrich" -> (streamScd2Enrich _),
-    "pipeline_e2e" -> (pipelineE2e _),
-    "pipeline_data_e2e" -> (pipelineDataE2e _),
-    "match_ml" -> (matchMl _),
-    "match_ml_score" -> (matchMlScore _),
-    "match_text_format" -> (matchTextFormat _),
-    "mm_binary_meta" -> (mmBinaryMeta _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_phash_neardup" -> (mmPhashNeardup _),
-    "stream_window_agg" -> (streamWindowAgg _),
-    "stream_sliding_window" -> (streamSlidingWindow _),
-    "stream_sessionize" -> (streamSessionize _),
-    "stream_dedup" -> (streamDedup _),
-    "stream_upsert" -> (streamUpsert _),
-    "stream_contamination" -> (streamContamination _),
-    "stream_neardup" -> (streamNearDup _),
-    "stream_asof" -> (streamAsof _),
-    "stream_asof_buffered" -> (streamAsofBuffered _),
-    "stream_interval_join" -> (streamIntervalJoin _),
-    "stream_neardup_bucketed" -> (streamNearDupBucketed _),
-    "sample_hash_consistent" -> (sampleHashConsistent _),
-    "sample_stratified" -> (sampleStratified _),
-    "join_skew_salted" -> (joinSkewSalted _),
-    "agg_skew_distinct" -> (aggSkewDistinct _),
-    "stream_enrich" -> (streamEnrich _),
-    "stream_hll" -> (streamHll _),
-    "stream_cms" -> (streamCms _),
-    "stream_quantile" -> (streamQuantile _),
-    "stream_session_window" -> (streamSessionWindow _),
-    "stream_drift_audit" -> (streamDriftAudit _),
-    "stream_drift_trailing" -> (streamDriftTrailing _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "match_ml_score" -> matchMlScoreOracle,
-    "events_rfm" -> eventsRfmOracle,
-    "events_pivot" -> eventsPivotOracle,
-    "events_unpivot" -> eventsUnpivotOracle,
-    "mine_itemsets" -> mineItemsetsOracle,
-    "mine_assoc_rules" -> mineAssocRulesOracle,
-    "events_markov" -> eventsMarkovOracle,
-    "events_sessionize" -> eventsSessionizeOracle,
-    "events_attribution" -> eventsAttributionOracle,
-    "events_rolling" -> eventsRollingOracle,
-    "events_scd2" -> eventsScd2Oracle,
-    "events_json" -> eventsJsonOracle,
-    "events_cube" -> eventsCubeOracle,
-    "events_anomaly" -> eventsAnomalyOracle,
-    "events_retention" -> eventsRetentionOracle,
-    "events_funnel" -> eventsFunnelOracle,
-    "asof_join_tol" -> asofJoinTolOracle,
-    "asof_join_fwd" -> asofJoinFwdOracle,
-    "asof_join_nearest" -> asofJoinNearestOracle,
-    "asof_join_chunked" -> asofJoinOracle,
-    "interval_overlap" -> intervalOverlapOracle,
-    "asof_join" -> asofJoinOracle,
-    "join_dim_scd" -> joinDimScdOracle,
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("events_rfm", eventsRfm, Some(eventsRfmOracle)),
+    QueryDef("events_pivot", eventsPivot, Some(eventsPivotOracle)),
+    QueryDef("events_unpivot", eventsUnpivot, Some(eventsUnpivotOracle)),
+    QueryDef("mine_itemsets", mineItemsets, Some(mineItemsetsOracle)),
+    QueryDef("mine_assoc_rules", mineAssocRules, Some(mineAssocRulesOracle)),
+    QueryDef("events_markov", eventsMarkov, Some(eventsMarkovOracle)),
+    QueryDef("events_sessionize", eventsSessionize, Some(eventsSessionizeOracle)),
+    QueryDef("events_attribution", eventsAttribution, Some(eventsAttributionOracle)),
+    QueryDef("events_rolling", eventsRolling, Some(eventsRollingOracle)),
+    QueryDef("events_scd2", eventsScd2, Some(eventsScd2Oracle)),
+    QueryDef("events_json", eventsJson, Some(eventsJsonOracle)),
+    QueryDef("events_cube", eventsCube, Some(eventsCubeOracle)),
+    QueryDef("events_anomaly", eventsAnomaly, Some(eventsAnomalyOracle)),
+    QueryDef("events_retention", eventsRetention, Some(eventsRetentionOracle)),
+    QueryDef("events_funnel", eventsFunnel, Some(eventsFunnelOracle)),
+    QueryDef("asof_join_tol", asofJoinTol, Some(asofJoinTolOracle)),
+    QueryDef("asof_join_fwd", asofJoinFwd, Some(asofJoinFwdOracle)),
+    QueryDef("asof_join_nearest", asofJoinNearest, Some(asofJoinNearestOracle)),
+    QueryDef("asof_join_chunked", asofJoinChunked, Some(asofJoinOracle)),
+    QueryDef("interval_overlap", intervalOverlap, Some(intervalOverlapOracle)),
+    QueryDef("asof_join", asofJoin, Some(asofJoinOracle)),
+    QueryDef("join_dim_scd", joinDimScd, Some(joinDimScdOracle)),
     // the reuse IS the point: the kernel must satisfy the same
     // interval law as the asof plan (see streamScd2Enrich doc)
-    "stream_scd2_enrich" -> joinDimScdOracle,
-    "pipeline_e2e" -> pipelineE2eOracle,
-    "pipeline_data_e2e" -> pipelineDataE2eOracle,
-    "match_text_format" -> matchTextFormatOracle,
-    "mm_binary_meta" -> mmBinaryMetaOracle,
-    "mm_frame_sample" -> mmFrameSampleOracle,
-    "mm_phash_neardup" -> mmPhashNeardupOracle,
-    "stream_neardup" -> streamNearDupOracle,
-    "stream_window_agg" -> streamWindowAggOracle,
-    "stream_sliding_window" -> streamSlidingWindowOracle,
-    "stream_sessionize" -> streamSessionizeOracle,
-    "stream_dedup" -> streamDedupOracle,
-    "stream_drift_audit" -> streamDriftAuditOracle,
-    "stream_drift_trailing" -> streamDriftTrailingOracle,
-    "stream_upsert" -> streamUpsertOracle,
-    "stream_contamination" -> streamContaminationOracle,
-    "stream_asof" -> streamAsofOracle,
-    "stream_asof_buffered" -> streamAsofOracle,
-    "stream_interval_join" -> streamIntervalJoinOracle,
-    "stream_neardup_bucketed" -> streamNearDupOracle,
-    "sample_hash_consistent" -> sampleHashConsistentOracle,
-    "sample_stratified" -> sampleStratifiedOracle,
-    "join_skew_salted" -> joinSkewSaltedOracle,
-    "agg_skew_distinct" -> aggSkewDistinctOracle,
-    "stream_enrich" -> streamEnrichOracle,
-    "stream_hll" -> streamHllOracle,
-    "stream_cms" -> streamCmsOracle,
-    "stream_quantile" -> streamQuantileOracle,
-    "stream_session_window" -> streamSessionWindowOracle
+    QueryDef("stream_scd2_enrich", streamScd2Enrich, Some(joinDimScdOracle)),
+    QueryDef("pipeline_e2e", pipelineE2e, Some(pipelineE2eOracle)),
+    QueryDef("pipeline_data_e2e", pipelineDataE2e, Some(pipelineDataE2eOracle)),
+    QueryDef("match_ml", matchMl, None),
+    QueryDef("match_ml_score", matchMlScore, Some(matchMlScoreOracle)),
+    QueryDef("match_text_format", matchTextFormat, Some(matchTextFormatOracle)),
+    QueryDef("mm_binary_meta", mmBinaryMeta, Some(mmBinaryMetaOracle)),
+    QueryDef("mm_frame_sample", mmFrameSample, Some(mmFrameSampleOracle)),
+    QueryDef("mm_phash_neardup", mmPhashNeardup, Some(mmPhashNeardupOracle)),
+    QueryDef("stream_window_agg", streamWindowAgg, Some(streamWindowAggOracle)),
+    QueryDef("stream_sliding_window", streamSlidingWindow, Some(streamSlidingWindowOracle)),
+    QueryDef("stream_sessionize", streamSessionize, Some(streamSessionizeOracle)),
+    QueryDef("stream_dedup", streamDedup, Some(streamDedupOracle)),
+    QueryDef("stream_upsert", streamUpsert, Some(streamUpsertOracle)),
+    QueryDef("stream_contamination", streamContamination, Some(streamContaminationOracle)),
+    // admission control runs the MinHash banding pipeline on both sides
+    QueryDef("stream_neardup", streamNearDup, Some(streamNearDupOracle), pipelines = 2),
+    QueryDef("stream_asof", streamAsof, Some(streamAsofOracle)),
+    QueryDef("stream_asof_buffered", streamAsofBuffered, Some(streamAsofOracle)),
+    // reads the events source as both sides of one stream-stream join
+    QueryDef("stream_interval_join", streamIntervalJoin,
+      Some(streamIntervalJoinOracle), pipelines = 2),
+    QueryDef("stream_neardup_bucketed", streamNearDupBucketed, Some(streamNearDupOracle)),
+    QueryDef("sample_hash_consistent", sampleHashConsistent, Some(sampleHashConsistentOracle)),
+    QueryDef("sample_stratified", sampleStratified, Some(sampleStratifiedOracle)),
+    QueryDef("join_skew_salted", joinSkewSalted, Some(joinSkewSaltedOracle)),
+    QueryDef("agg_skew_distinct", aggSkewDistinct, Some(aggSkewDistinctOracle)),
+    QueryDef("stream_enrich", streamEnrich, Some(streamEnrichOracle)),
+    QueryDef("stream_hll", streamHll, Some(streamHllOracle)),
+    QueryDef("stream_cms", streamCms, Some(streamCmsOracle)),
+    // sketch estimate plus the exact face
+    QueryDef("stream_quantile", streamQuantile, Some(streamQuantileOracle), pipelines = 2),
+    QueryDef("stream_session_window", streamSessionWindow, Some(streamSessionWindowOracle)),
+    QueryDef("stream_drift_audit", streamDriftAudit, Some(streamDriftAuditOracle)),
+    QueryDef("stream_drift_trailing", streamDriftTrailing, Some(streamDriftTrailingOracle))
   )
 }

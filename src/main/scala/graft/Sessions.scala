@@ -22,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Every entry path calls this once per session: the SparkEntry.queries
   * dispatch wrapper (covers the driver invoking query closures with its
-  * own SparkSession), Verify/Bench/Probe/Explain mains, and the shared
-  * test harness session.
+  * own SparkSession) and [[Harness.session]], which builds the session
+  * for every main and spec.
   */
 object Sessions {
   private val tuned = java.util.Collections.synchronizedSet(

@@ -15,6 +15,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("pipeline_e2e")(spark, "/root/testdata/sf0.001")
 
+  /** Every registered query, one [[QueryDef]] per name, family by family. */
+  lazy val registry: Seq[QueryDef] =
+    CoreQueries.queries ++ graft.normalization.NormQueries.queries ++
+      graft.blocking.BlockQueries.queries ++ graft.matching.MatchQueries.queries ++
+      graft.clustering.ClusterQueries.queries ++ graft.fusion.FuseQueries.queries ++
+      graft.dedup.DedupQueries.queries ++ graft.ann.AnnQueries.queries ++
+      graft.text.TextQueries.queries ++ graft.io.IoQueries.queries ++
+      graft.profiling.ProfileQueries.queries ++ graft.schema.SchemaQueries.queries ++
+      ExtraQueries.queries ++ graft.extraction.ExtractQueries.queries ++
+      graft.graph.GraphQueries.queries
+
   /** One entry per implemented operator from SURVEY.md §2. Each closure
     * is wrapped with [[Sessions.tune]] (idempotent, once per session) so
     * a caller invoking queries with its OWN SparkSession — the driver
@@ -22,31 +33,14 @@ object SparkEntry {
     * without any conf mutation inside the read helpers themselves.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (name, fn) =>
-      name -> ((s: SparkSession, dir: String) => fn(Sessions.tune(s), dir))
-    }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.all ++ graft.normalization.NormQueries.all ++
-      graft.blocking.BlockQueries.all ++ graft.matching.MatchQueries.all ++
-      graft.clustering.ClusterQueries.all ++ graft.fusion.FuseQueries.all ++
-      graft.dedup.DedupQueries.all ++ graft.ann.AnnQueries.all ++
-      graft.text.TextQueries.all ++ graft.io.IoQueries.all ++
-      graft.profiling.ProfileQueries.all ++ graft.schema.SchemaQueries.all ++
-      ExtraQueries.all ++ graft.extraction.ExtractQueries.all ++
-      graft.graph.GraphQueries.all
+    registry.map { d =>
+      d.name -> ((s: SparkSession, dir: String) => d.run(Sessions.tune(s), dir))
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ graft.normalization.NormQueries.oracles ++
-      graft.blocking.BlockQueries.oracles ++ graft.matching.MatchQueries.oracles ++
-      graft.clustering.ClusterQueries.oracles ++ graft.fusion.FuseQueries.oracles ++
-      graft.dedup.DedupQueries.oracles ++ graft.ann.AnnQueries.oracles ++
-      graft.text.TextQueries.oracles ++ graft.io.IoQueries.oracles ++
-      graft.profiling.ProfileQueries.oracles ++ graft.schema.SchemaQueries.oracles ++
-      ExtraQueries.oracles ++ graft.extraction.ExtractQueries.oracles ++
-      graft.graph.GraphQueries.oracles
+    registry.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }
 
 /** TPC-H-style analytic queries proving the relational core:
@@ -274,23 +268,13 @@ object CoreQueries {
       |    AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
       |GROUP BY 1 ORDER BY c_nationkey""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q5_anti_join" -> (q5AntiJoin _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q2_nation_revenue" -> (q2NationRevenue _),
-    "q3_topk_per_group" -> (q3TopkPerGroup _),
-    "q4_rollup" -> (q4Rollup _),
-    "sim_functions" -> (simFunctions _),
-    "range_join" -> (rangeJoin _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q5_anti_join" -> q5Oracle,
-    "q1_pricing_summary" -> q1Oracle,
-    "q2_nation_revenue" -> q2Oracle,
-    "q3_topk_per_group" -> q3Oracle,
-    "q4_rollup" -> q4Oracle,
-    "sim_functions" -> simOracle,
-    "range_join" -> rangeJoinOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("q5_anti_join", q5AntiJoin, Some(q5Oracle)),
+    QueryDef("q1_pricing_summary", q1PricingSummary, Some(q1Oracle)),
+    QueryDef("q2_nation_revenue", q2NationRevenue, Some(q2Oracle)),
+    QueryDef("q3_topk_per_group", q3TopkPerGroup, Some(q3Oracle)),
+    QueryDef("q4_rollup", q4Rollup, Some(q4Oracle)),
+    QueryDef("sim_functions", simFunctions, Some(simOracle)),
+    QueryDef("range_join", rangeJoin, Some(rangeJoinOracle))
   )
 }

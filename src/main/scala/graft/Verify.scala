@@ -1,39 +1,43 @@
 package graft
+
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+/** Correctness dump: each selected query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`scripts/check_oracle.py`).
+  * Exits 1, naming every query that threw, if any did.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir>
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Sessions.tune(spark) // parquet timestamp conf, one owner (Sessions)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    val failed = run(spark, Harness.selected, sfDir, outDir)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Dump every query in `registry` and its oracles; returns the names
+    * of the queries that threw, in run order. */
+  def run(spark: SparkSession, registry: Seq[QueryDef], sfDir: String,
+      outDir: String): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    // Optional local-iteration filter (comma-separated names); the
-    // driver never sets it, so the full gate is unaffected.
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",")
-      .map(_.trim).filter(_.nonEmpty).toSet
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally Bench.clearSessionState(spark) // no cross-query block leakage
+    val failed = registry.flatMap { d =>
+      try {
+        d.run(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${d.name}")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
+        Some(d.name)
+      } finally Harness.clear(spark) // no cross-query block leakage
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in hand-written SQL would otherwise make json.load
+    // fail and silently zero the whole oracle gate.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -43,10 +47,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = registry.flatMap(d => d.oracle.map(sql => s"${q(d.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -2,6 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** ANN / embedding-dedup queries + DuckDB oracles (SURVEY §2.12 #57–59).
@@ -1274,51 +1275,33 @@ object AnnQueries {
        |ORDER BY sq5.qid, sq5.rank""".stripMargin
   }
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_recall_eval" -> (annRecallEval _),
-    "ann_sq8" -> (annSq8 _),
-    "ann_pq_search" -> (annPqSearch _),
-    "ann_pq_refine" -> (annPqRefine _),
-    "ann_ivfpq" -> (annIvfpq _),
-    "ann_pq_fit" -> (annPqFit _),
-    "ann_truncate_recall" -> (annTruncateRecall _),
-    "ann_centroid_sim" -> (annCentroidSim _),
-    "dedup_embedding" -> (dedupEmbedding _),
-    "text_contamination_semantic" -> (textContaminationSemantic _),
-    "dedup_semantic" -> (dedupSemantic _),
-    "ann_bruteforce" -> (annBruteforce _),
-    "ann_lsh" -> (annLsh _),
-    "ann_ivf" -> (annIvf _),
-    "ann_ivf_search" -> (annIvfSearch _),
-    "ann_ivf_incremental" -> (annIvfIncremental _),
-    "ann_filtered" -> (annFiltered _),
-    "ann_filtered_oversample" -> (annFilteredOversample _),
-    "ann_ivf_filtered_oversample" -> (annIvfFilteredOversample _),
-    "block_embedding" -> (blockEmbedding _),
-    "match_vector_features" -> (matchVectorFeatures _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "ann_recall_eval" -> annRecallEvalOracle,
-    "ann_sq8" -> annSq8Oracle,
-    "ann_pq_search" -> annPqSearchOracle,
-    "ann_pq_refine" -> annPqRefineOracle,
-    "ann_ivfpq" -> annIvfpqOracle,
-    "ann_truncate_recall" -> annTruncateRecallOracle,
-    "ann_centroid_sim" -> annCentroidSimOracle,
-    "dedup_embedding" -> dedupEmbeddingOracle,
-    "text_contamination_semantic" -> textContaminationSemanticOracle,
-    "dedup_semantic" -> dedupSemanticOracle,
-    "ann_bruteforce" -> annBruteforceOracle,
-    "ann_lsh" -> annLshOracle,
-    "ann_ivf_search" -> annIvfSearchOracle,
+  def queries: Seq[QueryDef] = Seq(
+    // every index family plus the exact ground truth
+    QueryDef("ann_recall_eval", annRecallEval, Some(annRecallEvalOracle), pipelines = 7),
+    // exact micro-L2 ground truth rides along for recall@5
+    QueryDef("ann_sq8", annSq8, Some(annSq8Oracle), pipelines = 2),
+    QueryDef("ann_pq_search", annPqSearch, Some(annPqSearchOracle)),
+    QueryDef("ann_pq_refine", annPqRefine, Some(annPqRefineOracle)),
+    QueryDef("ann_ivfpq", annIvfpq, Some(annIvfpqOracle)),
+    QueryDef("ann_pq_fit", annPqFit, None),
+    QueryDef("ann_truncate_recall", annTruncateRecall, Some(annTruncateRecallOracle)),
+    QueryDef("ann_centroid_sim", annCentroidSim, Some(annCentroidSimOracle)),
+    QueryDef("dedup_embedding", dedupEmbedding, Some(dedupEmbeddingOracle)),
+    QueryDef("text_contamination_semantic", textContaminationSemantic,
+      Some(textContaminationSemanticOracle)),
+    QueryDef("dedup_semantic", dedupSemantic, Some(dedupSemanticOracle)),
+    QueryDef("ann_bruteforce", annBruteforce, Some(annBruteforceOracle)),
+    QueryDef("ann_lsh", annLsh, Some(annLshOracle)),
+    QueryDef("ann_ivf", annIvf, None),
+    QueryDef("ann_ivf_search", annIvfSearch, Some(annIvfSearchOracle)),
     // the incremental index hash-gates against the FULL-REBUILD law:
     // assignment is pointwise, so both must agree bit for bit
-    "ann_ivf_incremental" -> annIvfSearchOracle,
-    "ann_filtered" -> annFilteredOracle,
-    "ann_filtered_oversample" -> annFilteredOversampleOracle,
-    "ann_ivf_filtered_oversample" -> annIvfFilteredOversampleOracle,
-    "block_embedding" -> blockEmbeddingOracle,
-    "match_vector_features" -> matchVectorFeaturesOracle
+    QueryDef("ann_ivf_incremental", annIvfIncremental, Some(annIvfSearchOracle)),
+    QueryDef("ann_filtered", annFiltered, Some(annFilteredOracle)),
+    QueryDef("ann_filtered_oversample", annFilteredOversample, Some(annFilteredOversampleOracle)),
+    QueryDef("ann_ivf_filtered_oversample", annIvfFilteredOversample,
+      Some(annIvfFilteredOversampleOracle)),
+    QueryDef("block_embedding", blockEmbedding, Some(blockEmbeddingOracle)),
+    QueryDef("match_vector_features", matchVectorFeatures, Some(matchVectorFeaturesOracle))
   )
 }

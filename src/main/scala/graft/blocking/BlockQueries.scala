@@ -2,6 +2,7 @@ package graft.blocking
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Deterministic two-source entity-matching scenario shared by the
@@ -452,29 +453,17 @@ object BlockQueries {
       |SELECT id AS c_custkey, sid AS s_suppkey, dist_sq
       |FROM cand WHERE rn = 1 ORDER BY c_custkey""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "block_geo" -> (blockGeo _),
-    "pipeline_canopy_match" -> (pipelineCanopyMatch _),
-    "block_canopy" -> (blockCanopy _),
-    "block_meta" -> (blockMeta _),
-    "block_phonetic" -> (blockPhonetic _),
-    "block_standard" -> (blockStandard _),
-    "block_token" -> (blockToken _),
-    "block_sorted_nbhd" -> (blockSortedNbhd _),
-    "block_cross" -> (blockCross _),
-    "block_eval" -> (blockEval _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "block_geo" -> blockGeoOracle,
-    "pipeline_canopy_match" -> pipelineCanopyMatchOracle,
-    "block_canopy" -> blockCanopyOracle,
-    "block_meta" -> blockMetaOracle,
-    "block_phonetic" -> blockPhoneticOracle,
-    "block_standard" -> blockStandardOracle,
-    "block_token" -> blockTokenOracle,
-    "block_sorted_nbhd" -> blockSortedNbhdOracle,
-    "block_cross" -> blockCrossOracle,
-    "block_eval" -> blockEvalOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("block_geo", blockGeo, Some(blockGeoOracle)),
+    QueryDef("pipeline_canopy_match", pipelineCanopyMatch, Some(pipelineCanopyMatchOracle)),
+    QueryDef("block_canopy", blockCanopy, Some(blockCanopyOracle)),
+    QueryDef("block_meta", blockMeta, Some(blockMetaOracle)),
+    QueryDef("block_phonetic", blockPhonetic, Some(blockPhoneticOracle)),
+    QueryDef("block_standard", blockStandard, Some(blockStandardOracle)),
+    QueryDef("block_token", blockToken, Some(blockTokenOracle)),
+    QueryDef("block_sorted_nbhd", blockSortedNbhd, Some(blockSortedNbhdOracle)),
+    QueryDef("block_cross", blockCross, Some(blockCrossOracle)),
+    // candidates plus the exact ground truth
+    QueryDef("block_eval", blockEval, Some(blockEvalOracle), pipelines = 2)
   )
 }

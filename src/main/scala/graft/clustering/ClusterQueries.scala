@@ -2,6 +2,7 @@ package graft.clustering
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 import graft.functions.sims
 import graft.blocking.{Blockers, EmScenario}
@@ -579,32 +580,20 @@ object ClusterQueries {
       |     (SELECT k AS m FROM c) u
       |ORDER BY id""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cluster_connected_components" -> (clusterConnectedComponents _),
-    "cluster_cc_incremental" -> (clusterCcIncremental _),
-    "cluster_hierarchical_average" -> (clusterHierarchicalAverage _),
-    "cluster_greedy_one_to_one" -> (clusterGreedyOneToOne _),
-    "cluster_centre" -> (clusterCentre _),
-    "cluster_stable" -> (clusterStable _),
-    "cluster_max_bipartite" -> (clusterMaxBipartite _),
-    "cluster_hierarchical" -> (clusterHierarchical _),
-    "cluster_hierarchical_complete" -> (clusterHierarchicalComplete _),
-    "cluster_size_dist" -> (clusterSizeDist _),
-    "cluster_consistency" -> (clusterConsistency _),
-    "cluster_details" -> (clusterDetails _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "cluster_connected_components" -> ccOracle,
-    "cluster_cc_incremental" -> ccIncrementalOracle,
-    "cluster_greedy_one_to_one" -> greedyOracle,
-    "cluster_centre" -> centreOracle,
-    "cluster_stable" -> stableOracle,
-    "cluster_hierarchical" -> hierarchicalOracle,
-    "cluster_hierarchical_complete" -> hierarchicalCompleteOracle,
-    "cluster_hierarchical_average" -> hierarchicalAverageOracle,
-    "cluster_size_dist" -> sizeDistOracle,
-    "cluster_consistency" -> consistencyOracle,
-    "cluster_details" -> detailsOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("cluster_connected_components", clusterConnectedComponents, Some(ccOracle)),
+    QueryDef("cluster_cc_incremental", clusterCcIncremental, Some(ccIncrementalOracle)),
+    QueryDef("cluster_hierarchical_average", clusterHierarchicalAverage,
+      Some(hierarchicalAverageOracle)),
+    QueryDef("cluster_greedy_one_to_one", clusterGreedyOneToOne, Some(greedyOracle)),
+    QueryDef("cluster_centre", clusterCentre, Some(centreOracle)),
+    QueryDef("cluster_stable", clusterStable, Some(stableOracle)),
+    QueryDef("cluster_max_bipartite", clusterMaxBipartite, None),
+    QueryDef("cluster_hierarchical", clusterHierarchical, Some(hierarchicalOracle)),
+    QueryDef("cluster_hierarchical_complete", clusterHierarchicalComplete,
+      Some(hierarchicalCompleteOracle)),
+    QueryDef("cluster_size_dist", clusterSizeDist, Some(sizeDistOracle)),
+    QueryDef("cluster_consistency", clusterConsistency, Some(consistencyOracle)),
+    QueryDef("cluster_details", clusterDetails, Some(detailsOracle))
   )
 }

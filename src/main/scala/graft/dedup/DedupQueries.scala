@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Dedup queries + DuckDB oracles (SURVEY §2.12 #53–56). The oracles
@@ -629,33 +630,19 @@ object DedupQueries {
        |SELECT * FROM ver WHERE containment >= 0.9
        |ORDER BY contained_id, container_id""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_containment" -> (dedupContainment _),
-    "dedup_cross_source" -> (dedupCrossSource _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_cluster_quality" -> (dedupClusterQuality _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_eval" -> (dedupEval _),
-    "dedup_minhash_lsh" -> (dedupMinhashLsh _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_cluster" -> (dedupCluster _),
-    "dedup_cluster_sample" -> (dedupClusterSample _),
-    "dedup_split_leakfree" -> (dedupSplitLeakfree _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "dedup_containment" -> dedupContainmentOracle,
-    "dedup_cross_source" -> dedupCrossSourceOracle,
-    "dedup_incremental" -> dedupIncrementalOracle,
-    "dedup_cluster_quality" -> dedupClusterQualityOracle,
-    "dedup_exact" -> dedupExactOracle,
-    "dedup_ngram_jaccard" -> dedupNgramOracle,
-    "dedup_eval" -> dedupEvalOracle,
-    "dedup_minhash_lsh" -> dedupMinhashOracle,
-    "dedup_simhash" -> dedupSimhashOracle,
-    "dedup_cluster" -> dedupClusterOracle,
-    "dedup_cluster_sample" -> dedupClusterSampleOracle,
-    "dedup_split_leakfree" -> dedupSplitLeakfreeOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("dedup_containment", dedupContainment, Some(dedupContainmentOracle)),
+    QueryDef("dedup_cross_source", dedupCrossSource, Some(dedupCrossSourceOracle)),
+    QueryDef("dedup_incremental", dedupIncremental, Some(dedupIncrementalOracle)),
+    QueryDef("dedup_cluster_quality", dedupClusterQuality, Some(dedupClusterQualityOracle)),
+    QueryDef("dedup_exact", dedupExact, Some(dedupExactOracle)),
+    QueryDef("dedup_ngram_jaccard", dedupNgramJaccard, Some(dedupNgramOracle)),
+    // candidates plus the exact ground truth
+    QueryDef("dedup_eval", dedupEval, Some(dedupEvalOracle), pipelines = 2),
+    QueryDef("dedup_minhash_lsh", dedupMinhashLsh, Some(dedupMinhashOracle)),
+    QueryDef("dedup_simhash", dedupSimhash, Some(dedupSimhashOracle)),
+    QueryDef("dedup_cluster", dedupCluster, Some(dedupClusterOracle)),
+    QueryDef("dedup_cluster_sample", dedupClusterSample, Some(dedupClusterSampleOracle)),
+    QueryDef("dedup_split_leakfree", dedupSplitLeakfree, Some(dedupSplitLeakfreeOracle))
   )
 }

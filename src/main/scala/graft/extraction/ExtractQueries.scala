@@ -2,6 +2,7 @@ package graft.extraction
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Rule-discovery + extraction-evaluation queries (SURVEY §2.6). The
@@ -142,15 +143,9 @@ object ExtractQueries {
        |  (1990 + id % 30) // 10 * 10 AS decade
        |FROM m ORDER BY id""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "extract_autorules" -> (extractAutorules _),
-    "extract_eval" -> (extractEval _),
-    "extract_pipeline" -> (extractPipeline _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "extract_autorules" -> extractAutorulesOracle,
-    "extract_eval" -> extractEvalOracle,
-    "extract_pipeline" -> extractPipelineOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("extract_autorules", extractAutorules, Some(extractAutorulesOracle)),
+    QueryDef("extract_eval", extractEval, Some(extractEvalOracle)),
+    QueryDef("extract_pipeline", extractPipeline, Some(extractPipelineOracle))
   )
 }

@@ -2,6 +2,7 @@ package graft.fusion
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Fusion queries + DuckDB oracles (SURVEY §2.11). Scenario: every order
@@ -768,23 +769,24 @@ object FuseQueries {
        |FROM t$iters t JOIN acc USING (source) ORDER BY source""".stripMargin
   }
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fuse_truth_discovery" -> (fuseTruthDiscovery _),
-    "fuse_schema_compare" -> (fuseSchemaCompare _),
-    "fuse_eval_rules" -> (fuseEvalRules _),
-    "fuse_provenance" -> (fuseProvenance _),
-    "fuse_coverage" -> (fuseCoverage _),
-    "fuse_voting" -> (fuseVoting _),
-    "fuse_strings" -> (fuseStrings _),
-    "fuse_numeric" -> (fuseNumeric _),
-    "fuse_dates" -> (fuseDates _),
-    "fuse_lists" -> (fuseLists _),
-    "fuse_engine" -> (fuseEngine _),
-    "fuse_incremental" -> (fuseIncremental _),
-    "fuse_report" -> (fuseReport _),
-    "fuse_conflicts_preview" -> (fuseConflictsPreview _),
-    "fuse_eval" -> (fuseEval _),
-    "fuse_consistency" -> (fuseConsistency _)
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("fuse_truth_discovery", fuseTruthDiscovery, Some(fuseTruthDiscoveryOracle)),
+    QueryDef("fuse_schema_compare", fuseSchemaCompare, Some(fuseSchemaCompareOracle)),
+    QueryDef("fuse_eval_rules", fuseEvalRules, Some(fuseEvalRulesOracle)),
+    QueryDef("fuse_provenance", fuseProvenance, Some(fuseProvenanceOracle)),
+    QueryDef("fuse_coverage", fuseCoverage, Some(fuseCoverageOracle)),
+    QueryDef("fuse_voting", fuseVoting, Some(fuseVotingOracle)),
+    QueryDef("fuse_strings", fuseStrings, Some(fuseStringsOracle)),
+    QueryDef("fuse_numeric", fuseNumeric, Some(fuseNumericOracle)),
+    QueryDef("fuse_dates", fuseDates, Some(fuseDatesOracle)),
+    QueryDef("fuse_lists", fuseLists, Some(fuseListsOracle)),
+    QueryDef("fuse_engine", fuseEngine, Some(fuseEngineOracle)),
+    // full fusion IS the law
+    QueryDef("fuse_incremental", fuseIncremental, Some(fuseEngineOracle)),
+    QueryDef("fuse_report", fuseReport, Some(fuseReportOracle)),
+    QueryDef("fuse_conflicts_preview", fuseConflictsPreview, Some(fuseConflictsPreviewOracle)),
+    QueryDef("fuse_eval", fuseEval, Some(fuseEvalRealOracle)),
+    QueryDef("fuse_consistency", fuseConsistency, Some(fuseConsistencyOracle))
   )
 
   def fuseConsistency(s: SparkSession, dir: String): DataFrame =
@@ -801,26 +803,6 @@ object FuseQueries {
     s"""WITH $sourcesSql
        |${Seq("status", "price", "odate", "prio").map(one).mkString("\nUNION ALL\n")}""".stripMargin
   }
-
-  def oracles: Map[String, String] = Map(
-    "fuse_truth_discovery" -> fuseTruthDiscoveryOracle,
-    "fuse_schema_compare" -> fuseSchemaCompareOracle,
-    "fuse_eval_rules" -> fuseEvalRulesOracle,
-    "fuse_provenance" -> fuseProvenanceOracle,
-    "fuse_coverage" -> fuseCoverageOracle,
-    "fuse_voting" -> fuseVotingOracle,
-    "fuse_strings" -> fuseStringsOracle,
-    "fuse_numeric" -> fuseNumericOracle,
-    "fuse_dates" -> fuseDatesOracle,
-    "fuse_lists" -> fuseListsOracle,
-    "fuse_engine" -> fuseEngineOracle,
-    "fuse_incremental" -> fuseEngineOracle, // full fusion IS the law
-
-    "fuse_report" -> fuseReportOracle,
-    "fuse_conflicts_preview" -> fuseConflictsPreviewOracle,
-    "fuse_eval" -> fuseEvalRealOracle,
-    "fuse_consistency" -> fuseConsistencyOracle
-  )
 
   /** fuse_eval oracle: fused CTEs + gold compare, single metrics row. */
   val fuseEvalRealOracle: String =

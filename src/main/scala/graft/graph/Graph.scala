@@ -63,8 +63,8 @@ object PageRank {
     // rank frame. The sole caller ranks a NATION-level graph whose
     // node count is fixed at 25 at any data scale, so the broadcast
     // plan is the scale-correct one here; a billion-node rank loop
-    // should co-partition instead (the rejected variant, preserved in
-    // tools/R13Probe.scala).
+    // should co-partition instead (the rejected variant:
+    // `git show 0b2f524:src/main/scala/graft/tools/R13Probe.scala`).
     val e = edges.join(wsum, "src")
       .select(col("src"), col("dst"),
         expr(s"(w * ${sNum}L) div wt").as("s"))

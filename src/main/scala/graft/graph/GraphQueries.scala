@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Graph-analytics queries + DuckDB oracles (SURVEY §2.12 extension —
@@ -220,23 +221,13 @@ object GraphQueries {
        |${LinkPredict.oracleSql(100)}
        |SELECT id1, id2, common_neighbors, jaccard_milli FROM lp_top""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_link_predict" -> (graphLinkPredict _),
-    "graph_bfs" -> (graphBfs _),
-    "graph_sssp" -> (graphSssp _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_kcore" -> (graphKcore _),
-    "graph_lpa" -> (graphLpa _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "graph_bfs" -> graphBfsOracle,
-    "graph_sssp" -> graphSsspOracle,
-    "graph_pagerank" -> graphPagerankOracle,
-    "graph_triangles" -> graphTrianglesOracle,
-    "graph_kcore" -> graphKcoreOracle,
-    "graph_lpa" -> graphLpaOracle,
-    "graph_link_predict" -> graphLinkPredictOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("graph_link_predict", graphLinkPredict, Some(graphLinkPredictOracle)),
+    QueryDef("graph_bfs", graphBfs, Some(graphBfsOracle)),
+    QueryDef("graph_sssp", graphSssp, Some(graphSsspOracle)),
+    QueryDef("graph_pagerank", graphPagerank, Some(graphPagerankOracle)),
+    QueryDef("graph_triangles", graphTriangles, Some(graphTrianglesOracle)),
+    QueryDef("graph_kcore", graphKcore, Some(graphKcoreOracle)),
+    QueryDef("graph_lpa", graphLpa, Some(graphLpaOracle))
   )
 }

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** IO / provenance queries + DuckDB oracles (SURVEY §2.1). */
@@ -992,47 +993,25 @@ object IoQueries {
        |FROM e JOIN r USING (pred) CROSS JOIN b
        |ORDER BY pred""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "io_bucketed_join" -> (ioBucketedJoin _),
-    "io_zorder_compact" -> (ioZorderCompact _),
-    "io_compact_policy" -> (ioCompactPolicy _),
-    "io_dpp_join" -> (ioDppJoin _),
-    "io_jsonl_roundtrip" -> (ioJsonlRoundtrip _),
-    "io_table_diff" -> (ioTableDiff _),
-    "io_csv_roundtrip" -> (ioCsvRoundtrip _),
-    "io_zorder" -> (ioZorder _),
-    "io_zorder_pruned" -> (ioZorderPruned _),
-    "io_orc" -> (ioOrc _),
-    "io_compact" -> (ioCompact _),
-    "io_merge_schema" -> (ioMergeSchema _),
-    "io_partitioned" -> (ioPartitioned _),
-    "io_html" -> (ioHtml _),
-    "io_fwf" -> (ioFwf _),
-    "io_load_parquet" -> (ioLoadParquet _),
-    "io_provenance" -> (ioProvenance _),
-    "io_flatten" -> (ioFlatten _),
-    "io_explode_delim" -> (ioExplodeDelim _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "io_bucketed_join" -> ioBucketedJoinOracle,
-    "io_zorder_compact" -> ioZorderCompactOracle,
-    "io_compact_policy" -> ioCompactPolicyOracle,
-    "io_dpp_join" -> ioDppJoinOracle,
-    "io_jsonl_roundtrip" -> ioJsonlRoundtripOracle,
-    "io_table_diff" -> ioTableDiffOracle,
-    "io_csv_roundtrip" -> ioCsvRoundtripOracle,
-    "io_zorder" -> ioZorderOracle,
-    "io_zorder_pruned" -> ioZorderPrunedOracle,
-    "io_orc" -> ioOrcOracle,
-    "io_compact" -> ioCompactOracle,
-    "io_merge_schema" -> ioMergeSchemaOracle,
-    "io_partitioned" -> ioPartitionedOracle,
-    "io_html" -> ioHtmlOracle,
-    "io_fwf" -> ioFwfOracle,
-    "io_load_parquet" -> ioLoadParquetOracle,
-    "io_provenance" -> ioProvenanceOracle,
-    "io_flatten" -> ioFlattenOracle,
-    "io_explode_delim" -> ioExplodeDelimOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("io_bucketed_join", ioBucketedJoin, Some(ioBucketedJoinOracle)),
+    QueryDef("io_zorder_compact", ioZorderCompact, Some(ioZorderCompactOracle)),
+    QueryDef("io_compact_policy", ioCompactPolicy, Some(ioCompactPolicyOracle)),
+    QueryDef("io_dpp_join", ioDppJoin, Some(ioDppJoinOracle)),
+    QueryDef("io_jsonl_roundtrip", ioJsonlRoundtrip, Some(ioJsonlRoundtripOracle)),
+    QueryDef("io_table_diff", ioTableDiff, Some(ioTableDiffOracle)),
+    QueryDef("io_csv_roundtrip", ioCsvRoundtrip, Some(ioCsvRoundtripOracle)),
+    QueryDef("io_zorder", ioZorder, Some(ioZorderOracle)),
+    QueryDef("io_zorder_pruned", ioZorderPruned, Some(ioZorderPrunedOracle)),
+    QueryDef("io_orc", ioOrc, Some(ioOrcOracle)),
+    QueryDef("io_compact", ioCompact, Some(ioCompactOracle)),
+    QueryDef("io_merge_schema", ioMergeSchema, Some(ioMergeSchemaOracle)),
+    QueryDef("io_partitioned", ioPartitioned, Some(ioPartitionedOracle)),
+    QueryDef("io_html", ioHtml, Some(ioHtmlOracle)),
+    QueryDef("io_fwf", ioFwf, Some(ioFwfOracle)),
+    QueryDef("io_load_parquet", ioLoadParquet, Some(ioLoadParquetOracle)),
+    QueryDef("io_provenance", ioProvenance, Some(ioProvenanceOracle)),
+    QueryDef("io_flatten", ioFlatten, Some(ioFlattenOracle)),
+    QueryDef("io_explode_delim", ioExplodeDelim, Some(ioExplodeDelimOracle))
   )
 }

@@ -2,6 +2,7 @@ package graft.matching
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 import graft.functions.sims
 import graft.blocking.{Blockers, EmScenario}
@@ -842,24 +843,25 @@ object MatchQueries {
        |FROM lab, wp ORDER BY id1, id2""".stripMargin
   }
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "match_fellegi_sunter" -> (matchFellegiSunter _),
-    "sim_ratcliff" -> (simRatcliff _),
-    "sim_align" -> (simAlign _),
-    "sim_positional" -> (simPositional _),
-    "sim_token" -> (simToken _),
-    "sim_numeric_date" -> (simNumericDate _),
-    "sim_utils" -> (simUtils _),
-    "sim_ngram" -> (simNgram _),
-    "sim_registry" -> (simRegistry _),
-    "match_rule" -> (matchRule _),
-    "match_eval" -> (matchEval _),
-    "match_eval_labeled" -> (matchEvalLabeled _),
-    "match_auc" -> (matchAuc _),
-    "match_calibration" -> (matchCalibration _),
-    "match_threshold_sweep" -> (matchThresholdSweep _),
-    "match_uncertainty_sample" -> (matchUncertaintySample _),
-    "match_threshold_pick" -> (matchThresholdPick _)
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("match_fellegi_sunter", matchFellegiSunter, Some(matchFellegiSunterOracle)),
+    QueryDef("sim_ratcliff", simRatcliff, Some(simRatcliffOracle)),
+    QueryDef("sim_align", simAlign, Some(simAlignOracle)),
+    QueryDef("sim_positional", simPositional, Some(simPositionalOracle)),
+    QueryDef("sim_token", simToken, Some(simTokenOracle)),
+    QueryDef("sim_numeric_date", simNumericDate, Some(simNumericDateOracle)),
+    QueryDef("sim_utils", simUtils, Some(simUtilsOracle)),
+    QueryDef("sim_ngram", simNgram, Some(simNgramOracle)),
+    QueryDef("sim_registry", simRegistry, Some(simRegistryOracle)),
+    QueryDef("match_rule", matchRule, Some(matchRuleSql)),
+    QueryDef("match_eval", matchEval, Some(matchEvalOracle)),
+    QueryDef("match_eval_labeled", matchEvalLabeled, Some(matchEvalLabeledOracle)),
+    QueryDef("match_auc", matchAuc, Some(matchAucOracle)),
+    QueryDef("match_calibration", matchCalibration, Some(matchCalibrationOracle)),
+    QueryDef("match_threshold_sweep", matchThresholdSweep, Some(matchThresholdSweepOracle)),
+    QueryDef("match_uncertainty_sample", matchUncertaintySample,
+      Some(matchUncertaintySampleOracle)),
+    QueryDef("match_threshold_pick", matchThresholdPick, Some(matchThresholdPickOracle))
   )
 
   /** Threshold-free matcher evaluation: AUC per SCORER (full rule vs
@@ -1088,24 +1090,4 @@ object MatchQueries {
        |JOIN (${noOrder(simRatcliffOracle)}) ro ON ro.id1 = al.id1
        |JOIN (${noOrder(simPositionalOracle)}) po ON po.id1 = al.id1
        |ORDER BY al.id1""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "match_fellegi_sunter" -> matchFellegiSunterOracle,
-    "sim_registry" -> simRegistryOracle,
-    "sim_ratcliff" -> simRatcliffOracle,
-    "sim_align" -> simAlignOracle,
-    "sim_positional" -> simPositionalOracle,
-    "sim_token" -> simTokenOracle,
-    "sim_numeric_date" -> simNumericDateOracle,
-    "sim_utils" -> simUtilsOracle,
-    "sim_ngram" -> simNgramOracle,
-    "match_rule" -> matchRuleSql,
-    "match_eval" -> matchEvalOracle,
-    "match_eval_labeled" -> matchEvalLabeledOracle,
-    "match_auc" -> matchAucOracle,
-    "match_calibration" -> matchCalibrationOracle,
-    "match_threshold_sweep" -> matchThresholdSweepOracle,
-    "match_uncertainty_sample" -> matchUncertaintySampleOracle,
-    "match_threshold_pick" -> matchThresholdPickOracle
-  )
 }

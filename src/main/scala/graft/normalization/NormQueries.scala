@@ -2,6 +2,7 @@ package graft.normalization
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Driver-contract queries + DuckDB oracles for the normalization
@@ -911,63 +912,34 @@ object NormQueries {
       |FROM d JOIN maj ON maj.c_nationkey = d.c_nationkey
       |ORDER BY d.c_custkey""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "norm_fd_repair" -> (normFdRepair _),
-    "norm_text" -> (normText _),
-    "norm_headers" -> (normHeaders _),
-    "norm_tokenize" -> (normTokenize _),
-    "norm_nulls" -> (normNulls _),
-    "norm_boolean" -> (normBoolean _),
-    "norm_numeric" -> (normNumeric _),
-    "norm_dates" -> (normDates _),
-    "norm_urls" -> (normUrls _),
-    "norm_units" -> (normUnits _),
-    "norm_units_multi" -> (normUnitsMulti _),
-    "norm_valuefns" -> (normValueFns _),
-    "norm_outliers_zscore" -> (normOutliersZscore _),
-    "norm_outliers_mad" -> (normOutliersMad _),
-    "norm_impute" -> (normImpute _),
-    "norm_detect_types" -> (normDetectTypes _),
-    "norm_recommend" -> (normRecommend _),
-    "norm_outliers" -> (normOutliers _),
-    "norm_validate" -> (normValidate _),
-    "norm_coords" -> (normCoords _),
-    "norm_webtable" -> (normWebtable _),
-    "norm_convert" -> (normConvert _),
-    "norm_dup_detect" -> (normDupDetect _),
-    "norm_dataset" -> (normDataset _),
-    "norm_country" -> (normCountry _),
-    "norm_encoding" -> (normEncoding _),
-    "norm_quality_report" -> (normQualityReport _),
-    "norm_transforms" -> (normTransforms _))
-
-  def oracles: Map[String, String] = Map(
-    "norm_fd_repair" -> normFdRepairOracle,
-    "norm_text" -> normTextOracle,
-    "norm_headers" -> normHeadersOracle,
-    "norm_tokenize" -> normTokenizeOracle,
-    "norm_nulls" -> normNullsOracle,
-    "norm_boolean" -> normBooleanOracle,
-    "norm_numeric" -> normNumericOracle,
-    "norm_dates" -> normDatesOracle,
-    "norm_urls" -> normUrlsOracle,
-    "norm_units" -> normUnitsOracle,
-    "norm_units_multi" -> normUnitsMultiOracle,
-    "norm_valuefns" -> normValueFnsOracle,
-    "norm_outliers_zscore" -> normOutliersZscoreOracle,
-    "norm_outliers_mad" -> normOutliersMadOracle,
-    "norm_impute" -> normImputeOracle,
-    "norm_detect_types" -> normDetectTypesOracle,
-    "norm_recommend" -> normRecommendOracle,
-    "norm_outliers" -> normOutliersOracle,
-    "norm_validate" -> normValidateOracle,
-    "norm_coords" -> normCoordsOracle,
-    "norm_webtable" -> normWebtableOracle,
-    "norm_convert" -> normConvertOracle,
-    "norm_dup_detect" -> normDupDetectOracle,
-    "norm_dataset" -> normDatasetOracle,
-    "norm_country" -> normCountryOracle,
-    "norm_encoding" -> normEncodingOracle,
-    "norm_quality_report" -> normQualityReportOracle,
-    "norm_transforms" -> normTransformsOracle)
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("norm_fd_repair", normFdRepair, Some(normFdRepairOracle)),
+    QueryDef("norm_text", normText, Some(normTextOracle)),
+    QueryDef("norm_headers", normHeaders, Some(normHeadersOracle)),
+    QueryDef("norm_tokenize", normTokenize, Some(normTokenizeOracle)),
+    QueryDef("norm_nulls", normNulls, Some(normNullsOracle)),
+    QueryDef("norm_boolean", normBoolean, Some(normBooleanOracle)),
+    QueryDef("norm_numeric", normNumeric, Some(normNumericOracle)),
+    QueryDef("norm_dates", normDates, Some(normDatesOracle)),
+    QueryDef("norm_urls", normUrls, Some(normUrlsOracle)),
+    QueryDef("norm_units", normUnits, Some(normUnitsOracle)),
+    QueryDef("norm_units_multi", normUnitsMulti, Some(normUnitsMultiOracle)),
+    QueryDef("norm_valuefns", normValueFns, Some(normValueFnsOracle)),
+    QueryDef("norm_outliers_zscore", normOutliersZscore, Some(normOutliersZscoreOracle)),
+    QueryDef("norm_outliers_mad", normOutliersMad, Some(normOutliersMadOracle)),
+    QueryDef("norm_impute", normImpute, Some(normImputeOracle)),
+    QueryDef("norm_detect_types", normDetectTypes, Some(normDetectTypesOracle)),
+    QueryDef("norm_recommend", normRecommend, Some(normRecommendOracle)),
+    QueryDef("norm_outliers", normOutliers, Some(normOutliersOracle)),
+    QueryDef("norm_validate", normValidate, Some(normValidateOracle)),
+    QueryDef("norm_coords", normCoords, Some(normCoordsOracle)),
+    QueryDef("norm_webtable", normWebtable, Some(normWebtableOracle)),
+    QueryDef("norm_convert", normConvert, Some(normConvertOracle)),
+    QueryDef("norm_dup_detect", normDupDetect, Some(normDupDetectOracle)),
+    QueryDef("norm_dataset", normDataset, Some(normDatasetOracle)),
+    QueryDef("norm_country", normCountry, Some(normCountryOracle)),
+    QueryDef("norm_encoding", normEncoding, Some(normEncodingOracle)),
+    QueryDef("norm_quality_report", normQualityReport, Some(normQualityReportOracle)),
+    QueryDef("norm_transforms", normTransforms, Some(normTransformsOracle))
+  )
 }

@@ -2,6 +2,7 @@ package graft.profiling
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Profiling queries + DuckDB oracles (SURVEY §2.2). */
@@ -1094,59 +1095,35 @@ object ProfileQueries {
        |ORDER BY join_name""".stripMargin
   }
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "profile_kmv" -> (profileKmv _),
-    "profile_kmv_sharded" -> (profileKmvSharded _),
-    "profile_tclose" -> (profileTclose _),
-    "profile_privacy_gate" -> (profilePrivacyGate _),
-    "profile_join_size_est" -> (profileJoinSizeEst _),
-    "profile_quantile_sketch" -> (profileQuantileSketch _),
-    "profile_theta_overlap" -> (profileThetaOverlap _),
-    "profile_cms_topk" -> (profileCmsTopk _),
-    "profile_hll" -> (profileHll _),
-    "profile_benford" -> (profileBenford _),
-    "profile_ldiv" -> (profileLdiv _),
-    "profile_kanon" -> (profileKanon _),
-    "profile_checks" -> (profileChecks _),
-    "profile_fd" -> (profileFd _),
-    "profile_ind" -> (profileInd _),
-    "profile_drift" -> (profileDrift _),
-    "profile_quantiles" -> (profileQuantiles _),
-    "profile_columns" -> (profileColumns _),
-    "profile_topk" -> (profileTopk _),
-    "profile_compare" -> (profileCompare _),
-    "profile_numeric" -> (profileNumeric _),
-    "profile_summary" -> (profileSummary _),
-    "profile_histogram" -> (profileHistogram _),
-    "profile_correlation" -> (profileCorrelation _),
-    "profile_mi" -> (profileMi _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "profile_kmv" -> profileKmvOracle,
-    "profile_kmv_sharded" -> profileKmvShardedOracle,
-    "profile_tclose" -> profileTcloseOracle,
-    "profile_privacy_gate" -> profilePrivacyGateOracle,
-    "profile_join_size_est" -> profileJoinSizeEstOracle,
-    "profile_quantile_sketch" -> profileQuantileSketchOracle,
-    "profile_theta_overlap" -> profileThetaOverlapOracle,
-    "profile_cms_topk" -> profileCmsTopkOracle,
-    "profile_hll" -> profileHllOracle,
-    "profile_benford" -> profileBenfordOracle,
-    "profile_ldiv" -> profileLdivOracle,
-    "profile_kanon" -> profileKanonOracle,
-    "profile_checks" -> profileChecksOracle,
-    "profile_fd" -> profileFdOracle,
-    "profile_ind" -> profileIndOracle,
-    "profile_drift" -> profileDriftOracle,
-    "profile_quantiles" -> profileQuantilesOracle,
-    "profile_compare" -> profileCompareOracle,
-    "profile_columns" -> profileColumnsOracle,
-    "profile_topk" -> profileTopkOracle,
-    "profile_numeric" -> profileNumericOracle,
-    "profile_summary" -> profileSummaryOracle,
-    "profile_histogram" -> profileHistogramOracle,
-    "profile_correlation" -> profileCorrelationOracle,
-    "profile_mi" -> profileMiOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("profile_kmv", profileKmv, Some(profileKmvOracle)),
+    QueryDef("profile_kmv_sharded", profileKmvSharded, Some(profileKmvShardedOracle)),
+    QueryDef("profile_tclose", profileTclose, Some(profileTcloseOracle)),
+    QueryDef("profile_privacy_gate", profilePrivacyGate, Some(profilePrivacyGateOracle)),
+    // sketch estimate plus the exact face
+    QueryDef("profile_join_size_est", profileJoinSizeEst,
+      Some(profileJoinSizeEstOracle), pipelines = 2),
+    QueryDef("profile_quantile_sketch", profileQuantileSketch, Some(profileQuantileSketchOracle)),
+    // sketch aggregate plus the exact shingle-grouped face
+    QueryDef("profile_theta_overlap", profileThetaOverlap,
+      Some(profileThetaOverlapOracle), pipelines = 2),
+    QueryDef("profile_cms_topk", profileCmsTopk, Some(profileCmsTopkOracle)),
+    QueryDef("profile_hll", profileHll, Some(profileHllOracle)),
+    QueryDef("profile_benford", profileBenford, Some(profileBenfordOracle)),
+    QueryDef("profile_ldiv", profileLdiv, Some(profileLdivOracle)),
+    QueryDef("profile_kanon", profileKanon, Some(profileKanonOracle)),
+    QueryDef("profile_checks", profileChecks, Some(profileChecksOracle)),
+    QueryDef("profile_fd", profileFd, Some(profileFdOracle)),
+    QueryDef("profile_ind", profileInd, Some(profileIndOracle)),
+    QueryDef("profile_drift", profileDrift, Some(profileDriftOracle)),
+    QueryDef("profile_quantiles", profileQuantiles, Some(profileQuantilesOracle)),
+    QueryDef("profile_columns", profileColumns, Some(profileColumnsOracle)),
+    QueryDef("profile_topk", profileTopk, Some(profileTopkOracle)),
+    QueryDef("profile_compare", profileCompare, Some(profileCompareOracle)),
+    QueryDef("profile_numeric", profileNumeric, Some(profileNumericOracle)),
+    QueryDef("profile_summary", profileSummary, Some(profileSummaryOracle)),
+    QueryDef("profile_histogram", profileHistogram, Some(profileHistogramOracle)),
+    QueryDef("profile_correlation", profileCorrelation, Some(profileCorrelationOracle)),
+    QueryDef("profile_mi", profileMi, Some(profileMiOracle))
   )
 }

@@ -2,6 +2,7 @@ package graft.schema
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 import graft.blocking.EmScenario
 
@@ -266,26 +267,15 @@ object SchemaQueries {
       |FROM part
       |ORDER BY id""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "schema_label" -> (schemaLabel _),
-    "schema_instance" -> (schemaInstance _),
-    "schema_duplicate" -> (schemaDuplicate _),
-    "schema_eval" -> (schemaEval _),
-    "schema_threshold_sweep" -> (schemaThresholdSweep _),
-    "translate_mapping" -> (translateMapping _),
-    "extract_regex" -> (extractRegex _),
-    "extract_typed" -> (extractTyped _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "schema_label" -> schemaLabelOracle,
-    "schema_instance" -> schemaInstanceOracle,
-    "schema_duplicate" -> schemaDuplicateOracle,
-    "schema_eval" -> schemaEvalOracle,
-    "schema_threshold_sweep" -> schemaThresholdSweepOracle,
-    "translate_mapping" -> translateMappingOracle,
-    "extract_regex" -> extractRegexOracle,
-    "extract_typed" -> extractTypedOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("schema_label", schemaLabel, Some(schemaLabelOracle)),
+    QueryDef("schema_instance", schemaInstance, Some(schemaInstanceOracle)),
+    QueryDef("schema_duplicate", schemaDuplicate, Some(schemaDuplicateOracle)),
+    QueryDef("schema_eval", schemaEval, Some(schemaEvalOracle)),
+    QueryDef("schema_threshold_sweep", schemaThresholdSweep, Some(schemaThresholdSweepOracle)),
+    QueryDef("translate_mapping", translateMapping, Some(translateMappingOracle)),
+    QueryDef("extract_regex", extractRegex, Some(extractRegexOracle)),
+    QueryDef("extract_typed", extractTyped, Some(extractTypedOracle))
   )
 }
 

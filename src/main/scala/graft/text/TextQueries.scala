@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables._
 
 /** Text-analysis queries + DuckDB oracles (SURVEY §2.12 #60–63). */
@@ -1312,87 +1313,48 @@ object TextQueries {
       |    AS flesch_ease_milli
       |FROM m ORDER BY doc_id""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_encode" -> (textBpeEncode _),
-    "text_readability" -> (textReadability _),
-    "text_phrase_search" -> (textPhraseSearch _),
-    "text_lang_confusion" -> (textLangConfusion _),
-    "text_ngram_novelty" -> (textNgramNovelty _),
-    "text_line_dedup" -> (textLineDedup _),
-    "text_gopher_rules" -> (textGopherRules _),
-    "text_xent_buckets" -> (textXentBuckets _),
-    "text_weighted_sample" -> (textWeightedSample _),
-    "text_quality_adaptive" -> (textQualityAdaptive _),
-    "text_dsir" -> (textDsir _),
-    "text_tfidf_keywords" -> (textTfidfKeywords _),
-    "text_domain_cap" -> (textDomainCap _),
-    "text_bm25" -> (textBm25 _),
-    "text_retrieval_eval" -> (textRetrievalEval _),
-    "text_mixture_temperature" -> (textMixtureTemperature _),
-    "text_zipf" -> (textZipf _),
-    "text_entropy" -> (textEntropy _),
-    "text_unigram_xent" -> (textUnigramXent _),
-    "text_source_kl" -> (textSourceKl _),
-    "text_bigram_xent" -> (textBigramXent _),
-    "text_substring_dedup" -> (textSubstringDedup _),
-    "text_pii_scrub" -> (textPiiScrub _),
-    "text_contamination" -> (textContamination _),
-    "text_bloom_contamination" -> (textBloomContamination _),
-    "text_contamination_fuzzy" -> (textContaminationFuzzy _),
-    "text_mixture" -> (textMixture _),
-    "text_split" -> (textSplit _),
-    "text_pack" -> (textPack _),
-    "text_langid" -> (textLangid _),
-    "text_quality" -> (textQuality _),
-    "text_tokens" -> (textTokens _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_repetition" -> (textRepetition _),
-    "text_corpus_stats" -> (textCorpusStats _),
-    "text_budget_select" -> (textBudgetSelect _),
-    "text_chunk" -> (textChunk _),
-    "text_vocab" -> (textVocab _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "text_bpe_train" -> textBpeTrainOracle,
-    "text_bpe_encode" -> textBpeEncodeOracle,
-    "text_readability" -> textReadabilityOracle,
-    "text_phrase_search" -> textPhraseSearchOracle,
-    "text_lang_confusion" -> textLangConfusionOracle,
-    "text_ngram_novelty" -> textNgramNoveltyOracle,
-    "text_line_dedup" -> textLineDedupOracle,
-    "text_gopher_rules" -> textGopherRulesOracle,
-    "text_xent_buckets" -> textXentBucketsOracle,
-    "text_weighted_sample" -> textWeightedSampleOracle,
-    "text_quality_adaptive" -> textQualityAdaptiveOracle,
-    "text_dsir" -> textDsirOracle,
-    "text_tfidf_keywords" -> textTfidfKeywordsOracle,
-    "text_domain_cap" -> textDomainCapOracle,
-    "text_bm25" -> textBm25Oracle,
-    "text_retrieval_eval" -> textRetrievalEvalOracle,
-    "text_entropy" -> textEntropyOracle,
-    "text_unigram_xent" -> textUnigramXentOracle,
-    "text_source_kl" -> textSourceKlOracle,
-    "text_bigram_xent" -> textBigramXentOracle,
-    "text_mixture_temperature" -> textMixtureTemperatureOracle,
-    "text_zipf" -> textZipfOracle,
-    "text_substring_dedup" -> textSubstringDedupOracle,
-    "text_pii_scrub" -> textPiiScrubOracle,
-    "text_contamination" -> textContaminationOracle,
-    "text_bloom_contamination" -> textBloomContaminationOracle,
-    "text_contamination_fuzzy" -> textContaminationFuzzyOracle,
-    "text_mixture" -> textMixtureOracle,
-    "text_split" -> textSplitOracle,
-    "text_pack" -> textPackOracle,
-    "text_langid" -> textLangidOracle,
-    "text_quality" -> textQualityOracle,
-    "text_tokens" -> textTokensOracle,
-    "text_fingerprint" -> textFingerprintOracle,
-    "text_repetition" -> textRepetitionOracle,
-    "text_corpus_stats" -> textCorpusStatsOracle,
-    "text_budget_select" -> textBudgetSelectOracle,
-    "text_chunk" -> textChunkOracle,
-    "text_vocab" -> textVocabOracle
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("text_bpe_train", textBpeTrain, Some(textBpeTrainOracle)),
+    QueryDef("text_bpe_encode", textBpeEncode, Some(textBpeEncodeOracle)),
+    QueryDef("text_readability", textReadability, Some(textReadabilityOracle)),
+    QueryDef("text_phrase_search", textPhraseSearch, Some(textPhraseSearchOracle)),
+    QueryDef("text_lang_confusion", textLangConfusion, Some(textLangConfusionOracle)),
+    QueryDef("text_ngram_novelty", textNgramNovelty, Some(textNgramNoveltyOracle)),
+    QueryDef("text_line_dedup", textLineDedup, Some(textLineDedupOracle)),
+    QueryDef("text_gopher_rules", textGopherRules, Some(textGopherRulesOracle)),
+    QueryDef("text_xent_buckets", textXentBuckets, Some(textXentBucketsOracle)),
+    QueryDef("text_weighted_sample", textWeightedSample, Some(textWeightedSampleOracle)),
+    QueryDef("text_quality_adaptive", textQualityAdaptive, Some(textQualityAdaptiveOracle)),
+    QueryDef("text_dsir", textDsir, Some(textDsirOracle)),
+    QueryDef("text_tfidf_keywords", textTfidfKeywords, Some(textTfidfKeywordsOracle)),
+    QueryDef("text_domain_cap", textDomainCap, Some(textDomainCapOracle)),
+    QueryDef("text_bm25", textBm25, Some(textBm25Oracle)),
+    QueryDef("text_retrieval_eval", textRetrievalEval, Some(textRetrievalEvalOracle)),
+    QueryDef("text_mixture_temperature", textMixtureTemperature,
+      Some(textMixtureTemperatureOracle)),
+    QueryDef("text_zipf", textZipf, Some(textZipfOracle)),
+    QueryDef("text_entropy", textEntropy, Some(textEntropyOracle)),
+    QueryDef("text_unigram_xent", textUnigramXent, Some(textUnigramXentOracle)),
+    QueryDef("text_source_kl", textSourceKl, Some(textSourceKlOracle)),
+    QueryDef("text_bigram_xent", textBigramXent, Some(textBigramXentOracle)),
+    QueryDef("text_substring_dedup", textSubstringDedup, Some(textSubstringDedupOracle)),
+    QueryDef("text_pii_scrub", textPiiScrub, Some(textPiiScrubOracle)),
+    QueryDef("text_contamination", textContamination, Some(textContaminationOracle)),
+    QueryDef("text_bloom_contamination", textBloomContamination,
+      Some(textBloomContaminationOracle)),
+    QueryDef("text_contamination_fuzzy", textContaminationFuzzy,
+      Some(textContaminationFuzzyOracle)),
+    QueryDef("text_mixture", textMixture, Some(textMixtureOracle)),
+    QueryDef("text_split", textSplit, Some(textSplitOracle)),
+    QueryDef("text_pack", textPack, Some(textPackOracle)),
+    QueryDef("text_langid", textLangid, Some(textLangidOracle)),
+    QueryDef("text_quality", textQuality, Some(textQualityOracle)),
+    QueryDef("text_tokens", textTokens, Some(textTokensOracle)),
+    QueryDef("text_fingerprint", textFingerprint, Some(textFingerprintOracle)),
+    QueryDef("text_repetition", textRepetition, Some(textRepetitionOracle)),
+    QueryDef("text_corpus_stats", textCorpusStats, Some(textCorpusStatsOracle)),
+    QueryDef("text_budget_select", textBudgetSelect, Some(textBudgetSelectOracle)),
+    QueryDef("text_chunk", textChunk, Some(textChunkOracle)),
+    QueryDef("text_vocab", textVocab, Some(textVocabOracle))
   )
 }

@@ -1,40 +1,30 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.Harness
 
 /** Local perf-iteration aid (not part of the driver contract): runs the
-  * queries named in SPARK_GRAFT_ONLY N times each (SPARK_GRAFT_REPS,
-  * default 3) in one JVM and prints per-repetition seconds — separates
-  * JIT/codegen warmup from steady-state cost. Same forcing as Bench
-  * (bit_xor of xxhash64 over all columns).
+  * queries named in SPARK_GRAFT_ONLY (all when unset) SPARK_GRAFT_REPS
+  * times each (default 3) on a [[Harness]] session at SPARK_GRAFT_SF_DIR
+  * and prints per-repetition seconds — separates JIT/codegen warmup from
+  * steady-state cost — plus the row count and content hash of the last
+  * repetition.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",").map(_.trim)
-      .filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
+    val spark = Harness.session()
+    for (d <- Harness.selected) {
+      val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        df.agg(expr(s"bit_xor(xxhash64(${df.columns.map(c => s"`$c`").mkString(",")}))"))
-          .collect()
+        val (hash, rows) = Harness.force(d.run(spark, sfDir))
         val dt = (System.nanoTime() - t0) / 1e9
-        graft.Bench.clearSessionState(spark)
-        dt
+        Harness.clear(spark)
+        (dt, rows, hash)
       }
-      println(f"PROBE $name%-28s ${times.map(t => f"$t%7.2f").mkString(" ")}")
+      val (_, rows, hash) = runs.last
+      println(f"PROBE ${d.name}%-28s ${runs.map(r => f"${r._1}%7.2f").mkString(" ")}" +
+        f"  rows=$rows hash=$hash%016x")
     }
     spark.stop()
   }

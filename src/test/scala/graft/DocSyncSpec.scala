@@ -42,6 +42,13 @@ class DocSyncSpec extends AnyFunSuite {
       s"undeclared rows-only queries: $rowsOnly")
   }
 
+  test("every query name is registered exactly once") {
+    // a Map-based registry let a later family silently replace an
+    // earlier family's query of the same name
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    assert(dups.isEmpty, s"query names registered more than once: ${dups.toSeq.sorted.mkString(", ")}")
+  }
+
   test("SURVEY §2 totals line matches the live registry (r9 verdict ask #3)") {
     // The §2 totals drifted for three rounds running ("~220 (r8)" while
     // the registry grew). The totals line now carries machine-readable

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Partition-count invariance: every ORACLED query must produce a
@@ -10,39 +9,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * nondeterminism (float fold order, unstable top-1 picks, row_number
   * ties) that a single-configuration oracle compare cannot see.
   *
-  * The 4 declared rows-only queries are excluded on principle:
+  * The rows-only queries (`oracle = None` in the registry, pinned by
+  * SURVEY's DOCSYNC_ROWS_ONLY marker) are excluded on principle:
   * match_ml (LBFGS gradients fold per-partition), ann_ivf and
   * ann_pq_fit (KMeans init samples per-partition) are float-iterative
   * by nature; cluster_max_bipartite would pass but shares the
-  * rows-only gate, so it stays with its property spec. (sim_registry
-  * gained a composed oracle in r6 and is invariance-gated like any
-  * oracled query.)
+  * rows-only gate, so it stays with its property spec.
   */
 class InvarianceSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val rowsOnly = Set("match_ml", "ann_ivf", "cluster_max_bipartite", "ann_pq_fit")
-
-  private def hashOf(name: String): (Long, Long) = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    val r = df.agg(
-      coalesce(expr(s"bit_xor(xxhash64(${df.columns.map(c => s"`$c`").mkString(",")}))"),
-        lit(0L)),
-      count(lit(1))).collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
-
   test("every oracled query is shuffle-partition-count invariant (3 vs 7)") {
-    val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(rowsOnly)
+    val oracled = SparkEntry.registry.filter(_.oracle.isDefined).sortBy(_.name)
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (name <- names) {
-      spark.conf.set("spark.sql.shuffle.partitions", "3")
-      val h3 = hashOf(name)
-      Bench.clearSessionState(spark)
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val h7 = hashOf(name)
-      Bench.clearSessionState(spark)
-      if (h3 != h7) failures += s"$name: 3-part $h3 != 7-part $h7"
+    def hashAt(d: QueryDef, partitions: Int): (Long, Long) = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try Harness.force(d.run(spark, sf)) finally Harness.clear(spark)
+    }
+    for (d <- oracled) {
+      val h3 = hashAt(d, 3)
+      val h7 = hashAt(d, 7)
+      if (h3 != h7) failures += s"${d.name}: 3-part $h3 != 7-part $h7"
     }
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     assert(failures.isEmpty, failures.mkString("; "))

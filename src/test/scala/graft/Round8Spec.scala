@@ -160,7 +160,7 @@ class Round8Spec extends AnyFunSuite {
     }
     // PQ search: codebook and distance-table joins are broadcasts — the
     // corpus-sized codes frame must never shuffle onto a tiny side
-    val pq = graft.ann.AnnQueries.all("ann_pq_search")(spark, sf)
+    val pq = SparkEntry.queries("ann_pq_search")(spark, sf)
     val pp = pq.queryExecution.executedPlan.toString
     assert(pp.contains("BroadcastHashJoin"), "PQ joins should broadcast the small side")
     assert(!pp.contains("CartesianProduct") && !pp.contains("BroadcastNestedLoop"))

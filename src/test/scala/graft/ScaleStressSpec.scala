@@ -258,7 +258,7 @@ class ScaleStressSpec extends AnyFunSuite {
         val n = fn(spark, sfDir).count()
         ((System.nanoTime() - t0) / 1e9, n)
       }
-      graft.Bench.clearSessionState(spark)
+      Harness.clear(spark)
       name -> (runs.map(_._1).min, runs.head._2)
     }.toMap
     timeAll("/root/testdata/sf0.001") // warmup: JIT + codegen per plan shape

@@ -6,12 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{sims, SimImpl}
 
 object TestSpark {
-  lazy val spark: SparkSession = Sessions.tune(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate())
+  lazy val spark: SparkSession = Harness.session(4)
   val sf = "/root/testdata/sf0.001"
 }
 
