@@ -19,9 +19,9 @@ import org.apache.spark.storage.StorageLevel
   * one dedup run would otherwise crowd out every later job's memory.
   *
   * Hashes are md5-hex-prefix based so the DuckDB oracle can replay the
-  * pipeline bit-for-bit; substituting xxhash64 for md5 is a one-line
-  * change that trades oracle parity for raw speed at 100 TB (the join
-  * shapes are identical).
+  * pipeline bit-for-bit; the `spark.graft.dedup.hashFamily` conf
+  * substitutes xxhash64, trading oracle parity for raw speed at 100 TB
+  * (the join shapes are identical).
   */
 object Dedup {
 
@@ -103,29 +103,20 @@ object Dedup {
     * (eager), so the caller may unpersist the input immediately after.
     */
   def ngramJaccardFrom(sh: DataFrame, threshold: Double): DataFrame = {
-    {
-      val withPrefix = sh.withColumn("_pl",
-        (size(col("_sh")) - ceil(lit(threshold) * size(col("_sh"))) + 1).cast("int"))
-      val inv = withPrefix
-        .select(col("_id"), size(col("_sh")).as("_n"),
-          explode(slice(col("_sh"), lit(1), col("_pl"))).as("_s"))
-      // Size filter (also candidate-safe): J ≥ t forces t·|B| ≤ |A| ≤ |B|/t,
-      // so wildly different-sized docs never reach verification.
-      val cands = inv.select(col("_id").as("id1"), col("_n").as("_na"), col("_s"))
-        .join(inv.select(col("_id").as("id2"), col("_n").as("_nb"), col("_s")), "_s")
-        .filter(col("id1") < col("id2") &&
-          col("_na") >= lit(threshold) * col("_nb") &&
-          col("_nb") >= lit(threshold) * col("_na"))
-        .select("id1", "id2").distinct()
-      cands
-        .join(sh.select(col("_id").as("id1"), col("_sh").as("_sa")), "id1")
-        .join(sh.select(col("_id").as("id2"), col("_sh").as("_sb")), "id2")
-        .select(col("id1"), col("id2"),
-          round(size(array_intersect(col("_sa"), col("_sb")))
-            .cast("double") / size(array_union(col("_sa"), col("_sb"))), 5).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    }
+    val withPrefix = sh.withColumn("_pl",
+      (size(col("_sh")) - ceil(lit(threshold) * size(col("_sh"))) + 1).cast("int"))
+    val inv = withPrefix
+      .select(col("_id"), size(col("_sh")).as("_n"),
+        explode(slice(col("_sh"), lit(1), col("_pl"))).as("_s"))
+    // Size filter (also candidate-safe): J ≥ t forces t·|B| ≤ |A| ≤ |B|/t,
+    // so wildly different-sized docs never reach verification.
+    val cands = inv.select(col("_id").as("id1"), col("_n").as("_na"), col("_s"))
+      .join(inv.select(col("_id").as("id2"), col("_n").as("_nb"), col("_s")), "_s")
+      .filter(col("id1") < col("id2") &&
+        col("_na") >= lit(threshold) * col("_nb") &&
+        col("_nb") >= lit(threshold) * col("_na"))
+      .select("id1", "id2").distinct()
+    verified(cands, sh, sh, threshold)
   }
 
   /** Pick one canonical doc per near-dup component by an arbitrary
@@ -178,20 +169,31 @@ object Dedup {
         s"$HashFamilyConf must be md5 or xxhash64, got: $other")
     }
 
-  /** MinHash signature columns: minhash_i = lexicographic min over the
-    * doc's shingles of hashᵢ(shingle). String min avoids engine-
-    * specific hex→int casts while keeping the uniform-permutation
-    * behavior of the hash family.
+  /** MinHash band keys of a shingle-set column: `bands` keys, each the
+    * ':'-join of `rows` minima, minhash_i = lexicographic min over the
+    * doc's shingles of hashᵢ(shingle). String min avoids engine-specific
+    * hex→int casts while keeping the uniform-permutation behavior of the
+    * hash family. NULL on an empty shingle set, so posexplode emits no
+    * band row for a doc shorter than n words (all-null keys would
+    * otherwise bucket every such doc together).
     *
-    * Computed PER ROW with a higher-order array_min(transform(...)) —
-    * the former explode → groupBy(k min-aggs) shape shuffled the whole
-    * exploded shingle frame (docs × shingles rows); this computes the
-    * same k minima inside the scan stage with ZERO shuffle, which at
-    * 100 TB removes the largest exchange of the minhash pipeline. The
-    * md5 evaluation count is identical; only the data movement is gone.
+    * md5 and xxhash64 run as ONE codegen'd kernel call that references
+    * the shingle set once (graft.functions.minhash.bandKeys —
+    * bit-identical to the declarative law, see the kernel's scaladoc).
+    * Its declarative form — k `array_min(transform(...))` projections —
+    * collapsed with the shingle projection and re-evaluated the shingle
+    * construction k+1 times per row (6.4 s of banding vs 0.8 s for one
+    * shingling pass at sf0.1, r9), and its lambdas are interpreted. A
+    * custom family keeps that declarative form: correct, not fast.
     */
-  private def minhashSig(i: Int, hashHex: (Int, Column) => Column): Column =
-    array_min(transform(col("_sh"), s => hashHex(i, s))).as(s"_h$i")
+  private def bandKeysOf(sh: Column, bands: Int, rows: Int,
+      hh: (Int, Column) => Column): Column =
+    if (hh eq Md5Hash) graft.functions.minhash.bandKeys(sh, bands, rows, md5Family = true)
+    else if (hh eq XxHash) graft.functions.minhash.bandKeys(sh, bands, rows, md5Family = false)
+    else when(size(sh) > 0, array((0 until bands).map { b =>
+      concat_ws(":", (0 until rows).map(r =>
+        array_min(transform(sh, s => hh(b * rows + r, s)))): _*)
+    }: _*))
 
   /** Long-form banded MinHash signatures — one (id, shingles, band
     * index, band key) row per band, computed ENTIRELY per row before a
@@ -204,35 +206,53 @@ object Dedup {
       bands: Int = 4, rows: Int = 3,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
     val hh = hashHex.getOrElse(hashFamily(docs.sparkSession))
-    // no size(_sh) > 0 filter: the kernel emits NULL band keys for an
-    // empty shingle set and posexplode drops those rows — the filter
-    // form was pushed below the projection and inlined the whole
-    // interpreted shingle chain per row (r9 plan audit)
-    val sh = shingleFrame(docs, id, text, n)
-    // All k signature minima + the band keys in ONE codegen'd kernel
-    // call referencing `_sh` exactly once (graft.functions.minhash
-    // .bandKeys — bit-identical to the declarative law, see the
-    // kernel's scaladoc). The former shape (k separate
-    // array_min(transform) projections) collapsed with the shingle
-    // projection and re-evaluated the full shingle construction k+1
-    // times per row — measured 6.4 s of banding vs 0.8 s for one
-    // shingling pass at sf0.1 (r9).
-    val bandKeys: Column =
-      if (hh eq Md5Hash) graft.functions.minhash.bandKeys(col("_sh"), bands, rows, md5Family = true)
-      else if (hh eq XxHash) graft.functions.minhash.bandKeys(col("_sh"), bands, rows, md5Family = false)
-      else {
-        // custom hash family: correct but k-fold shingle re-evaluation;
-        // null on empty shingle sets mirrors the kernel paths
-        when(size(col("_sh")) > 0,
-          array((0 until bands).map { b =>
-            concat_ws(":", (0 until rows).map { r =>
-              array_min(transform(col("_sh"), s => hh(b * rows + r, s)))
-            }: _*)
-          }: _*))
-      }
-    sh.select(col("_id"), col("_sh"),
-      posexplode(bandKeys).as(Seq("_bidx", "_bkey")))
+    // no size(_sh) > 0 filter: empty shingle sets get NULL band keys and
+    // posexplode drops those rows — the filter form was pushed below the
+    // projection and inlined the whole interpreted shingle chain per row
+    // (r9 plan audit)
+    shingleFrame(docs, id, text, n).select(col("_id"), col("_sh"),
+      posexplode(bandKeysOf(col("_sh"), bands, rows, hh)).as(Seq("_bidx", "_bkey")))
   }
+
+  /** A shingle frame (_id, _sh) with its band keys `_bk` beside it. A
+    * caller that persists this frame computes every doc's band keys
+    * once, however many joins read them.
+    */
+  private[graft] def withBandKeys(sh: DataFrame, bands: Int, rows: Int,
+      hh: (Int, Column) => Column): DataFrame =
+    sh.select(col("_id"), col("_sh"), bandKeysOf(col("_sh"), bands, rows, hh).as("_bk"))
+
+  /** The LSH bucket join over two [[withBandKeys]] frames: each side
+    * posexplodes to one (_id, _bidx, _bkey) row per band, then ONE
+    * equi-join on (_bidx, _bkey) pairs every two docs that share any
+    * band key; `self` (both sides the same corpus) keeps id1 < id2,
+    * distinct id spaces keep every pair. The distinct folds a pair that
+    * collides in several bands into one candidate. Not checkpointed, so
+    * the plan-shape spec can read the join.
+    */
+  private[graft] def bandJoin(left: DataFrame, right: DataFrame, self: Boolean): DataFrame = {
+    def keys(b: DataFrame, as: String) =
+      b.select(col("_id").as(as), posexplode(col("_bk")).as(Seq("_bidx", "_bkey")))
+    val pairs = keys(left, "id1").join(keys(right, "id2"), Seq("_bidx", "_bkey"))
+    (if (self) pairs.filter(col("id1") < col("id2")) else pairs)
+      .select("id1", "id2").distinct()
+  }
+
+  /** Candidate pairs (id1, id2) verified by the true Jaccard of id1's
+    * shingle set in `left` and id2's in `right` (rounded to 5 places),
+    * kept at ≥ threshold. localCheckpoint-ed (eager), so the caller may
+    * release the shingle frames immediately after.
+    */
+  private def verified(cands: DataFrame, left: DataFrame, right: DataFrame,
+      threshold: Double): DataFrame =
+    cands
+      .join(left.select(col("_id").as("id1"), col("_sh").as("_sa")), "id1")
+      .join(right.select(col("_id").as("id2"), col("_sh").as("_sb")), "id2")
+      .select(col("id1"), col("id2"),
+        round(size(array_intersect(col("_sa"), col("_sb")))
+          .cast("double") / size(array_union(col("_sa"), col("_sb"))), 5).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .localCheckpoint(true)
 
   /** LSH candidate pairs BEFORE Jaccard verification — the raw band-join
     * output. Exposed so the banding quality itself can be measured
@@ -245,32 +265,19 @@ object Dedup {
       n: Int = 3, bands: Int = 4, rows: Int = 3,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
     val hh = hashHex.getOrElse(hashFamily(docs.sparkSession))
-    val sh = shingleFrame(docs, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    try minhashCandidatesFrom(sh, bands, rows, hh)
-    finally sh.unpersist(false)
+    minhashCandidatesFrom(shingleFrame(docs, id, text, n), bands, rows, hh)
   }
 
-  /** [[minhashCandidates]] body over a PREPARED (persisted) shingle
-    * frame. The result is localCheckpoint-ed (eager), so the caller may
-    * unpersist the input immediately after.
+  /** [[minhashCandidates]] body over a PREPARED shingle frame, read
+    * once: its band keys are persisted for the two sides of the band
+    * join and released here. The result is localCheckpoint-ed (eager),
+    * so the caller may unpersist the input immediately after.
     */
   def minhashCandidatesFrom(sh: DataFrame, bands: Int, rows: Int,
       hh: (Int, Column) => Column): DataFrame = {
-    val k = bands * rows
-    val sigs = sh.filter(size(col("_sh")) > 0)
-      .select(col("_id") +: (0 until k).map(i => minhashSig(i, hh)): _*)
-    val bandCols = col("_id") +: (0 until bands).map { b =>
-      concat_ws(":", (0 until rows).map(r => col(s"_h${b * rows + r}")): _*).as(s"_band$b")
-    }
-    val banded = sigs.select(bandCols: _*).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      (0 until bands).map { b =>
-        banded.select(col("_id").as("id1"), col(s"_band$b").as("_bk"))
-          .join(banded.select(col("_id").as("id2"), col(s"_band$b").as("_bk")), "_bk")
-          .filter(col("id1") < col("id2"))
-          .select("id1", "id2")
-      }.reduce(_.unionByName(_)).distinct().localCheckpoint(true)
-    } finally banded.unpersist(false)
+    val b = withBandKeys(sh, bands, rows, hh).persist(StorageLevel.MEMORY_AND_DISK)
+    try bandJoin(b, b, self = true).localCheckpoint(true)
+    finally b.unpersist(false)
   }
 
   /** Candidate-level evaluation of the MinHash-LSH banding against the
@@ -312,8 +319,8 @@ object Dedup {
   }
 
   /** MinHash + LSH near-dup (#54): k hashes in `bands` bands of `rows`
-    * rows; docs sharing any band signature become candidates (one
-    * equi-join per band on the band signature — the LSH bucket join);
+    * rows; docs sharing any band key become candidates (ONE equi-join on
+    * (band index, band key) — the LSH bucket join, [[bandJoin]]);
     * candidates are verified with the true shingle Jaccard.
     */
   def minhashLsh(docs: DataFrame, id: String, text: String, n: Int = 3,
@@ -321,86 +328,35 @@ object Dedup {
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
     // None = resolve from the session conf (md5 unless overridden)
     val hh = hashHex.getOrElse(hashFamily(docs.sparkSession))
-    val k = bands * rows
-    // Persisted: reused by the signature aggregation AND both
+    // Persisted: read by both sides of the band join AND both
     // verification joins. Released in the finally below.
-    val sh = shingleFrame(docs, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    // One row per doc; persisted so the per-band self-joins (2 branches ×
-    // `bands` unions) reuse the signatures instead of recomputing the
-    // k-way minhash per branch. Docs with no shingle (< n words) are
-    // excluded exactly as the former explode → groupBy shape excluded
-    // them (they emitted no exploded row); without the filter their
-    // all-null band signatures would spuriously bucket together.
-    val sigs = sh.filter(size(col("_sh")) > 0)
-      .select(col("_id") +: (0 until k).map(i => minhashSig(i, hh)): _*)
-    val bandCols = col("_id") +: (0 until bands).map { b =>
-      concat_ws(":", (0 until rows).map(r => col(s"_h${b * rows + r}")): _*).as(s"_band$b")
-    }
-    val banded = sigs.select(bandCols: _*).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cands = (0 until bands).map { b =>
-        banded.select(col("_id").as("id1"), col(s"_band$b").as("_bk"))
-          .join(banded.select(col("_id").as("id2"), col(s"_band$b").as("_bk")), "_bk")
-          .filter(col("id1") < col("id2"))
-          .select("id1", "id2")
-      }.reduce(_.unionByName(_)).distinct()
-      cands
-        .join(sh.select(col("_id").as("id1"), col("_sh").as("_sa")), "id1")
-        .join(sh.select(col("_id").as("id2"), col("_sh").as("_sb")), "id2")
-        .select(col("id1"), col("id2"),
-          round(size(array_intersect(col("_sa"), col("_sb")))
-            .cast("double") / size(array_union(col("_sa"), col("_sb"))), 5).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    } finally { banded.unpersist(false); sh.unpersist(false) }
+    val sh = withBandKeys(shingleFrame(docs, id, text, n), bands, rows, hh)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try verified(bandJoin(sh, sh, self = true), sh, sh, threshold)
+    finally sh.unpersist(false)
   }
 
   /** Cross-corpus MinHash + LSH: near-dups of `left` docs against a
     * SEPARATE `right` corpus — fuzzy decontamination of a training set
     * against an eval set (the Llama/GPT-report variant of exact n-gram
     * contamination), or incremental dedup against an existing index.
-    * Same signature/band machinery as [[minhashLsh]], but the band
-    * equi-joins run LEFT × RIGHT instead of self-joining (no id1<id2
-    * filter — the id spaces are distinct); never all-pairs, and AQE
-    * broadcasts the banded eval side when it is small (the usual case).
+    * Same band keys and bucket join as [[minhashLsh]], but the one
+    * (band index, band key) equi-join runs LEFT × RIGHT instead of
+    * self-joining (no id1<id2 filter — the id spaces are distinct);
+    * never all-pairs, and AQE broadcasts the eval side's band rows when
+    * they are small (the usual case).
     */
   def minhashLshAgainst(left: DataFrame, right: DataFrame, id: String,
       text: String, n: Int = 3, bands: Int = 4, rows: Int = 3,
       threshold: Double = 0.8,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
     val hh = hashHex.getOrElse(hashFamily(left.sparkSession))
-    val k = bands * rows
-    val shL = shingleFrame(left, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    val shR = shingleFrame(right, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    def banded(sh: DataFrame) = {
-      val sigs = sh.filter(size(col("_sh")) > 0)
-        .select(col("_id") +: (0 until k).map(i => minhashSig(i, hh)): _*)
-      sigs.select(col("_id") +: (0 until bands).map { b =>
-        concat_ws(":", (0 until rows).map(r => col(s"_h${b * rows + r}")): _*)
-          .as(s"_band$b")
-      }: _*)
-    }
-    val bl = banded(shL).persist(StorageLevel.MEMORY_AND_DISK)
-    val br = banded(shR).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cands = (0 until bands).map { b =>
-        bl.select(col("_id").as("id1"), col(s"_band$b").as("_bk"))
-          .join(br.select(col("_id").as("id2"), col(s"_band$b").as("_bk")), "_bk")
-          .select("id1", "id2")
-      }.reduce(_.unionByName(_)).distinct()
-      cands
-        .join(shL.select(col("_id").as("id1"), col("_sh").as("_sa")), "id1")
-        .join(shR.select(col("_id").as("id2"), col("_sh").as("_sb")), "id2")
-        .select(col("id1"), col("id2"),
-          round(size(array_intersect(col("_sa"), col("_sb")))
-            .cast("double") / size(array_union(col("_sa"), col("_sb"))), 5)
-            .as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    } finally {
-      bl.unpersist(false); br.unpersist(false)
-      shL.unpersist(false); shR.unpersist(false)
-    }
+    def banded(d: DataFrame) = withBandKeys(shingleFrame(d, id, text, n), bands, rows, hh)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val shL = banded(left)
+    val shR = banded(right)
+    try verified(bandJoin(shL, shR, self = false), shL, shR, threshold)
+    finally { shL.unpersist(false); shR.unpersist(false) }
   }
 
   /** 16-bit SimHash signature (#55) over distinct word tokens: bit j is
@@ -414,8 +370,9 @@ object Dedup {
     // per token (measured 3× slower end-to-end). Here md5 is evaluated
     // once per token row and hash aggregation partials combine map-side,
     // so the exchange carries one partial row per doc per partition —
-    // already the right shape at 100 TB. (minhashSig CAN fold per-row
-    // because its shingle frame is persisted — a real boundary.)
+    // already the right shape at 100 TB. (The MinHash band keys CAN
+    // fold per row: one native kernel call over the shingle set, which
+    // no collapsed projection can multiply.)
     // The 16 votes need only the HIGH BIT of each of the first 16 hex
     // nibbles (digit ≥ '8'). Extract the two 32-bit halves once per
     // token (conv + cast) and read each vote as an integer shift/and —

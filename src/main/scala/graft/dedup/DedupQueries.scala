@@ -433,7 +433,7 @@ object DedupQueries {
     * Jaccard) against the EXISTING corpus, then within itself. Status
     * per batch doc, by precedence:
     *   'dup_corpus' — has a verified near-dup in the corpus
-    *     ([[Dedup.minhashLshAgainst]]: batch × corpus band joins, no
+    *     ([[Dedup.minhashLshAgainst]]: one batch × corpus band join, no
     *     self-join, corpus never re-deduped);
     *   'dup_batch'  — has a verified near-dup with a SMALLER batch id
     *     (the greedy first-wins pairwise rule production systems use —
@@ -444,7 +444,7 @@ object DedupQueries {
     * text), and a prefixed near-copy of that novel doc. At scale the
     * corpus side ships as its persisted banded-signature frame — the
     * incremental index — so each new dump pays only its own shingling
-    * plus band equi-joins.
+    * plus one (band, key) equi-join.
     */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir).select(col("doc_id"), col("text"))

@@ -573,16 +573,12 @@ object Streams {
     * interesting part and is identical either way.
     */
   def contaminationStream(docs: DataFrame, probeSet: DataFrame,
-      id: String, text: String, n: Int = 3): DataFrame = {
-    val base = docs.select(col(id), split(lower(col(text)), " ").as("_w"))
-    val g = org.apache.spark.sql.functions.expr(
-      s"transform(sequence(1, greatest(size(_w) - ${n - 1}, 1)), " +
-        s"i -> array_join(slice(_w, i, $n), ' '))")
-    base.select(col(id), explode(g).as("_g"))
+      id: String, text: String, n: Int = 3): DataFrame =
+    docs.select(col(id), split(lower(col(text)), " ").as("_w"))
+      .select(col(id), explode(graft.text.TextOps.wordGrams("_w", n)).as("_g"))
       .join(broadcast(probeSet), Seq("_g"), "left_semi")
       .select(id)
       .dropDuplicates(Seq(id))
-  }
 
   /** Streaming near-dup ADMISSION CONTROL — the MinHash tier of
     * stream-side filtering (contaminationStream is the exact-n-gram

@@ -73,9 +73,7 @@ object Bloom {
          |        cast(p % 64 as int)) & 1) = 1))""".stripMargin
     docs
       .select(col(id), split(lower(col(text)), " ").as("_w"))
-      .withColumn("_ga", expr(
-        s"transform(sequence(1, greatest(size(_w) - ${n - 1}, 1), 1), " +
-          s"i -> array_join(slice(_w, i, $n), ' '))"))
+      .withColumn("_ga", TextOps.wordGrams("_w", n))
       .withColumn("_bm", lit(bitmap))
       // a null text yields a null gram array and `exists` propagates
       // the null; coalesce keeps both evaluator flags non-null booleans

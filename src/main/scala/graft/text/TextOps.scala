@@ -93,12 +93,9 @@ object TextOps {
     */
   def repetitionSignals(docs: DataFrame, id: String, text: String): DataFrame = {
     val withWords = docs.select(col(id), split(lower(col(text)), " ").as("_w"))
-    def ngrams(n: Int) = expr(
-      s"transform(sequence(1, greatest(size(_w) - ${n - 1}, 1)), " +
-        s"i -> array_join(slice(_w, i, $n), ' '))")
     val grams = withWords.select(col(id),
       size(col("_w")).cast("long").as("n_words"),
-      ngrams(2).as("_g2"), ngrams(3).as("_g3"))
+      wordGrams("_w", 2).as("_g2"), wordGrams("_w", 3).as("_g3"))
       .select(col(id), col("n_words"),
         // `div` (exact integer floor), not `/` (double): basis points
         // must be bit-stable at any count magnitude
@@ -153,40 +150,41 @@ object TextOps {
     * decontamination): word n-grams of each document are equi-joined
     * against the distinct n-gram set of an eval corpus; per document,
     * the count and share of contaminated n-grams. The probe set is the
-    * small side (an eval benchmark) → broadcast; the corpus side is one
-    * explode + one partial-aggregable groupBy — never all-pairs.
+    * small side (an eval benchmark) → broadcast; the corpus side is ONE
+    * explode left-joined to the probe set (each gram tagged `_hit` = 1
+    * when the set holds it) and ONE partial-aggregable groupBy that
+    * counts grams and hits together — never all-pairs. The probe set is
+    * distinct, so the left join keeps every doc gram exactly once.
     */
   def contamination(docs: DataFrame, probes: DataFrame, id: String,
       text: String, n: Int = 3): DataFrame = {
-    def docGrams(d: DataFrame, idc: Option[String]): DataFrame = {
-      val base = d.select((idc.map(col).toSeq :+ split(lower(col(text)), " ").as("_w")): _*)
-      val g = expr(
-        s"transform(sequence(1, greatest(size(_w) - ${n - 1}, 1)), " +
-          s"i -> array_join(slice(_w, i, $n), ' '))")
-      base.select((idc.map(col).toSeq :+ explode(g).as("_g")): _*)
-    }
-    val probeSet = docGrams(probes, None).select("_g").distinct()
-    val grams = docGrams(docs, Some(id))
-    val total = grams.groupBy(col(id)).agg(count(lit(1)).as("n_ngrams"))
-    val hit = grams.join(broadcast(probeSet), "_g")
-      .groupBy(col(id)).agg(count(lit(1)).as("n_contaminated"))
-    total.join(hit, Seq(id), "left")
-      .select(col(id), col("n_ngrams"),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-        expr("coalesce(n_contaminated, 0) * 10000 div n_ngrams").as("contaminated_bp"))
+    val probeSet = ngramSet(probes, text, n).withColumn("_hit", lit(1L))
+    docs.select(col(id), split(lower(col(text)), " ").as("_w"))
+      .select(col(id), explode(wordGrams("_w", n)).as("_g"))
+      .join(broadcast(probeSet), Seq("_g"), "left")
+      .groupBy(col(id))
+      .agg(count(lit(1)).as("n_ngrams"),
+        coalesce(sum("_hit"), lit(0L)).as("n_contaminated"))
+      .select(col(id), col("n_ngrams"), col("n_contaminated"),
+        expr("n_contaminated * 10000 div n_ngrams").as("contaminated_bp"))
   }
+
+  /** The word n-grams of the word-array column `w`, in order and with
+    * repeats: the ' '-join of each n consecutive words. A doc shorter
+    * than n words yields one gram, its whole text. `w` must name a
+    * projected column — the law reads it twice.
+    */
+  private[graft] def wordGrams(w: String, n: Int): Column = expr(
+    s"transform(sequence(1, greatest(size($w) - ${n - 1}, 1)), " +
+      s"i -> array_join(slice($w, i, $n), ' '))")
 
   /** Distinct word-n-gram set of a corpus (the probe side of
     * [[contamination]] and the streaming filter) — one explode +
     * distinct, schema (`_g` STRING).
     */
-  def ngramSet(docs: DataFrame, text: String, n: Int = 3): DataFrame = {
-    val base = docs.select(split(lower(col(text)), " ").as("_w"))
-    val g = expr(
-      s"transform(sequence(1, greatest(size(_w) - ${n - 1}, 1)), " +
-        s"i -> array_join(slice(_w, i, $n), ' '))")
-    base.select(explode(g).as("_g")).distinct()
-  }
+  def ngramSet(docs: DataFrame, text: String, n: Int = 3): DataFrame =
+    docs.select(split(lower(col(text)), " ").as("_w"))
+      .select(explode(wordGrams("_w", n)).as("_g")).distinct()
 
   /** Deterministic stratified sampling for training-data mixtures: keep
     * a row iff the first 4 hex chars of md5(key) fall below the
@@ -534,7 +532,10 @@ object TextOps {
                qTerms: Int = 6, k1: Double = 1.2, b: Double = 0.75,
                k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (tf, dl) = postings(docs, id, text)
+    val tf = postings(docs, id, text)
+    // dl = Σ tf — re-aggregating the postings frame instead of re-exploding
+    // the full token stream (tf is vocab×docs-bounded, the stream is not)
+    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val st = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val idf = dfreq.crossJoin(broadcast(st)).select(col("term"),
@@ -562,18 +563,13 @@ object TextOps {
         (col("score_scaled").cast("double") / lit(1.0e9)).as("score"))
   }
 
-  /** (doc, term, tf) postings and (doc, dl) lengths from whitespace
-    * tokens — the shared scan for the retrieval/entropy/LM-score family.
+  /** (doc, term, tf) postings from whitespace tokens — the shared scan
+    * for the retrieval/entropy/LM-score family. A doc's length dl is
+    * Σ tf over its postings.
     */
-  private def postings(docs: DataFrame, id: String, text: String): (DataFrame, DataFrame) = {
-    val toks = docs.select(col(id).as("doc_id"),
-      explode(split(lower(col(text)), " ")).as("term"))
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // dl = Σ tf — re-aggregating the postings frame instead of re-exploding
-    // the full token stream (tf is vocab×docs-bounded, the stream is not)
-    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    (tf, dl)
-  }
+  private def postings(docs: DataFrame, id: String, text: String): DataFrame =
+    docs.select(col(id).as("doc_id"), explode(split(lower(col(text)), " ")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
 
   /** Per-document unigram token entropy — the low-diversity filter of
     * training-data pipelines (boilerplate / keyword-stuffing detection):
@@ -584,20 +580,19 @@ object TextOps {
     * All logs are [[graft.functions.DetMath.detLn]] (bit-reproducible);
     * each tf·ln tf is floor-scaled to a 1e-9-granular long before the
     * per-doc sum, so aggregation is addition-order-invariant. Scan-shaped:
-    * one postings groupBy, one per-doc reduce — no joins beyond doc id.
+    * one postings groupBy, then ONE per-doc reduce that sums dl, the
+    * scaled tf·ln tf and the distinct-term count together — no join.
     */
   def tokenEntropy(docs: DataFrame, id: String, text: String,
                    lowThreshold: Double = 0.6): DataFrame = {
-    val (tf, dl) = postings(docs, id, text)
     import graft.functions.DetMath.detLn
     val tfD = col("tf").cast("double")
-    val s = tf
-      .select(col("doc_id"), floor((tfD * detLn(tfD)) * lit(1.0e9)).as("sc"))
-      .groupBy("doc_id").agg(sum("sc").as("s"), count(lit(1)).as("n_distinct"))
+    val s = postings(docs, id, text)
+      .groupBy("doc_id").agg(sum("tf").as("dl"),
+        sum(floor((tfD * detLn(tfD)) * lit(1.0e9))).as("s"), count(lit(1)).as("n_distinct"))
     val dlD = col("dl").cast("double")
     val h = detLn(dlD) - ((col("s").cast("double") / lit(1.0e9)) / dlD)
-    dl.join(s, "doc_id")
-      .select(col("doc_id"), col("dl").as("n_tokens"), col("n_distinct"),
+    s.select(col("doc_id"), col("dl").as("n_tokens"), col("n_distinct"),
         h.as("entropy"),
         when(col("dl") > 1, h / detLn(dlD)).otherwise(lit(0.0)).as("entropy_norm"))
       .withColumn("flag_low", col("entropy_norm") < lowThreshold)
@@ -612,20 +607,21 @@ object TextOps {
     * where cf = corpus frequency of the term and T = Σ cf. Same
     * determinism contract as [[tokenEntropy]]. 100 TB: cf and its log live
     * on a vocab-bounded frame joined into the postings (AQE broadcasts
-    * when small); T is a 1-row broadcast.
+    * when small); T is a 1-row broadcast. lncf's terms are exactly tf's,
+    * so the inner join keeps every posting and dl = Σ tf folds into the
+    * one per-doc reduce.
     */
   def unigramCrossEntropy(docs: DataFrame, id: String, text: String): DataFrame = {
-    val (tf, dl) = postings(docs, id, text)
+    val tf = postings(docs, id, text)
     import graft.functions.DetMath.detLn
     val cf = tf.groupBy("term").agg(sum("tf").as("cf"))
     val lncf = cf.select(col("term"), detLn(col("cf").cast("double")).as("lncf"))
     val tot = cf.agg(sum("cf").as("t"))
     val s = tf.join(lncf, "term")
-      .select(col("doc_id"),
-        floor((col("tf").cast("double") * col("lncf")) * lit(1.0e9)).as("sc"))
-      .groupBy("doc_id").agg(sum("sc").as("s"))
+      .groupBy("doc_id").agg(sum("tf").as("dl"),
+        sum(floor((col("tf").cast("double") * col("lncf")) * lit(1.0e9))).as("s"))
     val dlD = col("dl").cast("double")
-    dl.join(s, "doc_id").crossJoin(broadcast(tot))
+    s.crossJoin(broadcast(tot))
       .select(col("doc_id"), col("dl").as("n_tokens"),
         (detLn(col("t").cast("double"))
           - ((col("s").cast("double") / lit(1.0e9)) / dlD)).as("xent"))
@@ -754,7 +750,7 @@ object TextOps {
                     k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.DetMath.detLn
-    val (tf, _) = postings(docs, id, text)
+    val tf = postings(docs, id, text)
     val dfr = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nd = docs.agg(count(lit(1)).as("n_docs"))
     val idf = dfr.crossJoin(broadcast(nd))

@@ -26,4 +26,11 @@ object Bridge {
     val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     cls.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
   }
+
+  /** Wait until the listener bus has delivered every queued event, so a
+    * listener's counts are complete before they are read
+    * (`listenerBus` is private to the spark package).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-SHAPE regression tests: the scale claims in SURVEY §5 are
@@ -170,5 +172,43 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("Filter") && p.contains("md5"),
       s"hash-law filters missing from the plan:\n$p")
     assert(count(p, "CartesianProduct") == 0, s"cartesian leaked:\n$p")
+  }
+
+  // ---- corpus curation: one plan per operator, not a fan-out ----------
+
+  private def curationDocs = {
+    val spark2 = spark
+    import spark2.implicits._
+    Seq((1L, "a b c d e"), (2L, "a b c d f"), (3L, "x y z")).toDF("doc_id", "text")
+  }
+
+  private def joins(p: LogicalPlan): Int = p.collect { case j: Join => j }.size
+
+  test("LSH band join: ONE (band, key) equi-join and no interpreted lambda " +
+      "for the md5 and xxhash64 families") {
+    val sh = graft.dedup.Dedup.shingleFrame(curationDocs, "doc_id", "text", 3)
+    for (fam <- Seq(graft.dedup.Dedup.Md5Hash, graft.dedup.Dedup.XxHash); self <- Seq(true, false)) {
+      val b = graft.dedup.Dedup.withBandKeys(sh, 4, 3, fam)
+      val p = graft.dedup.Dedup.bandJoin(b, b, self).queryExecution.optimizedPlan
+      assert(joins(p) == 1, s"band join fanned out:\n$p")
+      assert(!p.exists(_.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction]))),
+        s"band keys fell back to interpreted lambdas:\n$p")
+    }
+  }
+
+  test("tokenEntropy: one per-doc aggregate, no join") {
+    val p = graft.text.TextOps.tokenEntropy(curationDocs, "doc_id", "text")
+      .queryExecution.optimizedPlan
+    assert(joins(p) == 0, s"entropy re-joined its per-doc aggregates:\n$p")
+  }
+
+  test("contamination: ONE aggregate over the doc-gram explode (besides the " +
+      "probe-side distinct) and one join") {
+    val p = graft.text.TextOps.contamination(curationDocs, curationDocs, "doc_id", "text", 3)
+      .queryExecution.optimizedPlan
+    val aggs = p.collect { case a: Aggregate => a }
+    val perDoc = aggs.filter(_.groupingExpressions.exists(_.references.exists(_.name == "doc_id")))
+    assert(aggs.size == 2 && perDoc.size == 1 && joins(p) == 1,
+      s"contamination explodes or aggregates the doc grams more than once:\n$p")
   }
 }
