@@ -10,8 +10,11 @@ import graft.functions.{DetExp, DetLn, HyperplaneBits, StringSim, VecBinary}
   *
   * Cluster deploy: `--conf spark.sql.extensions=graft.GraftExtensions`
   * makes `graft_jaro('a','b')` etc. available in plain SQL on every
-  * session. For an already-running session, `GraftFunctions.register`
-  * installs the same functions at runtime.
+  * session, and installs [[graft.plans.RangeJoinRule]], which rewrites
+  * integral range joins to bin equi-joins. For an already-running
+  * session, `GraftFunctions.register` installs the same functions at
+  * runtime (the rule is per-session via
+  * `spark.experimental.extraOptimizations`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -27,7 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[VecBinary].getName, name),
         builder))
     }
-    // Opt-in range-join rewrite (no-op until the binWidth conf is set).
+    // range-join rewrite, bin width estimated per join at planning time
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
   }
 }

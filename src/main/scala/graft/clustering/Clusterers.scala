@@ -1,6 +1,6 @@
 package graft.clustering
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rows used with case-class Encoders inside [[Clusterers]] — must be
@@ -23,34 +23,6 @@ case class Membership(id: Long, cluster: Long)
   * this needs O(log n) regardless of chain length.
   */
 object Clusterers {
-
-  /** Eagerly localCheckpoint `df`, returning the checkpointed frame plus
-    * the ids of the RDD blocks it pinned in the block manager — so each
-    * CC round can free the previous round's blocks (round-3 verdict: the
-    * checkpoints were never released, and 82 back-to-back queries in one
-    * JVM accumulated enough dead blocks to slow later queries ~20×).
-    *
-    * The pinned RDD id is found by diffing `getPersistentRDDs` around the
-    * (eager, synchronous) checkpoint; Spark exposes no public handle to
-    * the internal RDD a Dataset checkpoint persists, and unpersisting the
-    * public `df.rdd` wrapper would not free it. The diff is guarded by a
-    * library-wide lock so two graft operators on the same session can
-    * never attribute each other's blocks; a caller persisting their OWN
-    * RDDs concurrently from another thread should not overlap that with
-    * clusterer calls (misattributed localCheckpoint blocks would be
-    * freed and are not recomputable).
-    */
-  private val checkpointLock = new Object
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
-    checkpointLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(true)
-      (out, sc.getPersistentRDDs.keySet.toSet.diff(before))
-    }
-
-  private def freeRdds(spark: SparkSession, ids: Set[Int]): Unit =
-    ids.foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
   /** Cluster-size distribution (reference entitymatching/evaluation.py:
     * 1085 create_cluster_size_distribution): connected components over
@@ -121,7 +93,11 @@ object Clusterers {
       .select(col("id1").cast("long").as("u"), col("id2").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .as[(Long, Long)].rdd
-    val part = new org.apache.spark.HashPartitioner(math.max(raw.getNumPartitions, 1))
+    // at most the session's shuffle partitions: a match frame that
+    // inherits a many-file scan's partitioning would otherwise run
+    // every round with one task per input file, however few the edges
+    val part = new org.apache.spark.HashPartitioner(math.max(1,
+      math.min(raw.getNumPartitions, spark.conf.get("spark.sql.shuffle.partitions").toInt)))
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // (node-keyed min) with the shared partitioner; input must already be

@@ -19,9 +19,9 @@ import org.apache.spark.storage.StorageLevel
   * one dedup run would otherwise crowd out every later job's memory.
   *
   * Hashes are md5-hex-prefix based so the DuckDB oracle can replay the
-  * pipeline bit-for-bit; the `spark.graft.dedup.hashFamily` conf
-  * substitutes xxhash64, trading oracle parity for raw speed at 100 TB
-  * (the join shapes are identical).
+  * pipeline bit-for-bit; passing `hashHex = Some(XxHash)` substitutes
+  * xxhash64, trading oracle parity for raw speed at 100 TB (the join
+  * shapes are identical).
   */
 object Dedup {
 
@@ -144,30 +144,15 @@ object Dedup {
         (col("id") === col("canonical_id")).as("keep"))
   }
 
-  /** Hash families for the minhash signatures. md5 is the DuckDB-
-    * replayable oracle-parity default; xxhash64 is ~5-10× cheaper per
-    * shingle and the right choice on a real cluster (identical join
-    * shapes, no oracle).
+  /** Hash families for the minhash signatures, chosen per call by the
+    * `hashHex` argument. md5 is the DuckDB-replayable oracle-parity
+    * default; xxhash64 is ~5-10× cheaper per shingle and the right
+    * choice on a real cluster (identical join shapes, no oracle).
     */
   val Md5Hash: (Int, Column) => Column =
     (i, s) => substring(md5(concat(lit(s"$i#"), s)), 1, 8)
   val XxHash: (Int, Column) => Column =
     (i, s) => format_string("%016x", xxhash64(lit(i), s))
-
-  val HashFamilyConf = "spark.graft.dedup.hashFamily"
-
-  /** Session-configured hash family: `spark.graft.dedup.hashFamily` =
-    * `md5` (default — oracle parity) or `xxhash64` (the production
-    * choice once hashing is scan-bound). One conf flips every minhash
-    * site; the LSH join shapes are identical either way.
-    */
-  def hashFamily(spark: org.apache.spark.sql.SparkSession): (Int, Column) => Column =
-    spark.conf.get(HashFamilyConf, "md5") match {
-      case "md5" => Md5Hash
-      case "xxhash64" => XxHash
-      case other => throw new IllegalArgumentException(
-        s"$HashFamilyConf must be md5 or xxhash64, got: $other")
-    }
 
   /** MinHash band keys of a shingle-set column: `bands` keys, each the
     * ':'-join of `rows` minima, minhash_i = lexicographic min over the
@@ -205,7 +190,7 @@ object Dedup {
   def bandedLong(docs: DataFrame, id: String, text: String, n: Int = 3,
       bands: Int = 4, rows: Int = 3,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    val hh = hashHex.getOrElse(hashFamily(docs.sparkSession))
+    val hh = hashHex.getOrElse(Md5Hash)
     // no size(_sh) > 0 filter: empty shingle sets get NULL band keys and
     // posexplode drops those rows — the filter form was pushed below the
     // projection and inlined the whole interpreted shingle chain per row
@@ -264,8 +249,8 @@ object Dedup {
   def minhashCandidates(docs: DataFrame, id: String, text: String,
       n: Int = 3, bands: Int = 4, rows: Int = 3,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    val hh = hashHex.getOrElse(hashFamily(docs.sparkSession))
-    minhashCandidatesFrom(shingleFrame(docs, id, text, n), bands, rows, hh)
+    minhashCandidatesFrom(shingleFrame(docs, id, text, n), bands, rows,
+      hashHex.getOrElse(Md5Hash))
   }
 
   /** [[minhashCandidates]] body over a PREPARED shingle frame, read
@@ -300,9 +285,8 @@ object Dedup {
         val shSorted = sh.select(col("_id"), array_sort(col("_sh")).as("_sh"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val hh = hashFamily(docs.sparkSession)
           // both localCheckpoint-ed eagerly inside, so unpersist is safe
-          (minhashCandidatesFrom(sh, bands, rows, hh),
+          (minhashCandidatesFrom(sh, bands, rows, Md5Hash),
             ngramJaccardFrom(shSorted, threshold).select("id1", "id2"))
         } finally shSorted.unpersist(false)
       } finally sh.unpersist(false)
@@ -326,8 +310,7 @@ object Dedup {
   def minhashLsh(docs: DataFrame, id: String, text: String, n: Int = 3,
       bands: Int = 4, rows: Int = 3, threshold: Double = 0.8,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    // None = resolve from the session conf (md5 unless overridden)
-    val hh = hashHex.getOrElse(hashFamily(docs.sparkSession))
+    val hh = hashHex.getOrElse(Md5Hash)
     // Persisted: read by both sides of the band join AND both
     // verification joins. Released in the finally below.
     val sh = withBandKeys(shingleFrame(docs, id, text, n), bands, rows, hh)
@@ -350,7 +333,7 @@ object Dedup {
       text: String, n: Int = 3, bands: Int = 4, rows: Int = 3,
       threshold: Double = 0.8,
       hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    val hh = hashHex.getOrElse(hashFamily(left.sparkSession))
+    val hh = hashHex.getOrElse(Md5Hash)
     def banded(d: DataFrame) = withBandKeys(shingleFrame(d, id, text, n), bands, rows, hh)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val shL = banded(left)

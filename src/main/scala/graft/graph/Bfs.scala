@@ -9,22 +9,16 @@ import org.apache.spark.sql.functions._
   * analysis ("which records are ≤ k hops from a known-bad source?")
   * and cluster-diameter QA on a match graph.
   *
-  * Level-synchronous frontier expansion, `iters` fixed sweeps: the
-  * symmetrized adjacency is hash-partitioned on src ONCE and persisted
-  * (every sweep's join reuses that partitioning — the same one-time
-  * layout the LPA/cc sweeps use); each sweep joins only the FRONTIER
-  * (nodes first reached last sweep, shrinking) against it, anti-joins
-  * the settled set, and the new nodes become the next frontier. A
-  * node's distance is the sweep index that first reached it — the BFS
-  * level, deterministic regardless of partitioning or tie order, which
-  * is what lets the whole frame hash-gate against a recursive-CTE
-  * replay (`min(dist)` over the bounded (v, dist) walk).
-  *
-  * 100 TB shape: per sweep ONE shuffle-free-on-adj join + a distinct +
-  * an anti-join against the settled frame; state is (reached nodes) ×
-  * 1 long. O(diameter) rounds like cc's pointer-doubling — and `iters`
-  * CAPS it explicitly, which is what you want operationally (a
-  * blast-radius query asks "within k hops", not "to convergence").
+  * BFS is [[Sssp]] with unit weights: after k relaxation sweeps the
+  * minimum weight over paths of ≤ k edges IS the BFS level — the hop
+  * count at which a node is first reached, deterministic regardless of
+  * partitioning or tie order, which is what lets the whole frame
+  * hash-gate against a recursive-CTE replay (`min(dist)` over the
+  * bounded (v, dist) walk). One sweep loop serves both: the adjacency
+  * is hash-partitioned on src once and persisted, each sweep joins
+  * only the frontier against it, and `iters` CAPS the rounds
+  * explicitly, which is what you want operationally (a blast-radius
+  * query asks "within k hops", not "to convergence").
   */
 object Bfs {
 
@@ -33,41 +27,8 @@ object Bfs {
     * Duplicate seed rows are deduped (one dist-0 row per node — the
     * same min(dist) contract the recursive-CTE oracle has).
     */
-  def run(seeds: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"bfs requires iters >= 1, got $iters")
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val adj = edges.select(col("id1").as("src"), col("id2").as("dst"))
-      .unionByName(edges.select(col("id2").as("src"), col("id1").as("dst")))
-      .distinct()
-      .repartition(col("src")).persist()
-    var dist = seeds.select(col("v")).distinct()
-      .select(col("v"), lit(0L).as("dist")).persist()
-    persisted += dist
-    var frontier = dist
-    for (i <- 1 to iters) {
-      // lazy persists: each level/settled frame is computed exactly
-      // once, during the single final action — no per-level jobs (the
-      // eager-materialization variant paid 3 scheduling rounds per
-      // level for the same DAG)
-      val next = frontier.join(adj, col("v") === col("src"))
-        .select(col("dst").as("v"))
-        .distinct()
-        .join(dist.select(col("v")), Seq("v"), "left_anti")
-        .select(col("v"), lit(i.toLong).as("dist"))
-        .persist()
-      persisted += next
-      dist = dist.unionByName(next).persist()
-      persisted += dist
-      frontier = next
-    }
-    // localCheckpoint materializes every intermediate exactly once;
-    // after it the per-level caches are dead weight for the session
-    // lifetime — release them all, not just adj (r10 advice).
-    val out = dist.localCheckpoint(true)
-    adj.unpersist(false)
-    persisted.foreach(_.unpersist(false))
-    out
-  }
+  def run(seeds: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    Sssp.run(seeds, edges.select(col("id1"), col("id2"), lit(1L).as("w")), iters)
 
   /** Recursive-CTE replay: expects `seeds(v)` and `e(id1, id2)` CTEs
     * upstream; emits a `bfs(v, dist)` CTE (min hop level per node,

@@ -4,13 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-source single-source-shortest-paths over integer-weighted
-  * undirected edges — the WEIGHTED member the hop-distance [[Bfs]]
-  * doesn't cover ("how far" when links have costs, not just "how many
-  * hops"): weighted blast-radius, trust-propagation distance over a
-  * match graph whose link types carry different confidence costs.
+  * undirected edges — "how far" when links have costs, not just "how
+  * many hops" (the hop-distance [[Bfs]] is this with unit weights):
+  * weighted blast-radius, trust-propagation distance over a match
+  * graph whose link types carry different confidence costs.
   *
   * Level-synchronous Bellman–Ford, `iters` capped relaxation sweeps
-  * over the SAME once-partitioned adjacency idiom as [[Bfs.run]]: the
+  * over a once-partitioned adjacency (the LPA/cc sweeps' idiom): the
   * symmetrized weighted adjacency is hash-partitioned on src ONCE and
   * persisted; each sweep joins only the IMPROVED frontier (nodes whose
   * best distance changed last sweep, shrinking toward convergence)
@@ -57,7 +57,8 @@ object Sssp {
     persisted += best
     var frontier = best
     for (_ <- 1 to iters) {
-      // lazy persists, one final action — the Bfs.run scheduling idiom
+      // lazy persists: each sweep's frame is computed exactly once,
+      // during the single final action — no per-sweep jobs
       val cand = frontier.join(adj, col("v") === col("src"))
         .select(col("dst").as("v"), (col("dist") + col("w")).as("dist"))
         .groupBy(col("v")).agg(min(col("dist")).as("dist"))

@@ -69,58 +69,39 @@ object AsofJoin {
         rightCols.map(c => col("_m")(c).as(c))): _*)
   }
 
-  /** Session conf routing [[asofBackward]] through
-    * [[asofBackwardChunked]] — the hot-key-safe path — without touching
-    * call sites:
-    *  - `auto` (DEFAULT, r10): decide per call. A FREE stats gate
-    *    (`optimizedPlan.stats.sizeInBytes`, no job) keeps small inputs
-    *    on the one-shuffle unchunked plan; past it, ONE bounded
-    *    sampling job estimates the max per-key history and the ts
-    *    range (the same planning-time-sample idiom RangeJoinRule's
-    *    `auto` uses), and a key whose history would exceed one
-    *    partition's sort routes chunked with a width that splits it
-    *    into ~[[AutoTargetChunkRows]]-row chunks. The two plans are
-    *    result-identical (spec-enforced), so routing never changes an
-    *    answer — only whether one key's history may span partitions.
-    *  - a positive long: always chunk with that width.
-    *  - `0` / `off`: never chunk (the pre-r10 default).
-    * Only applies when the ts column is numeric (the chunked path's
-    * contract) and both sides are batch (a streaming side can't be
-    * sampled and has its own operators); such calls keep the unchunked
-    * plan rather than failing at a distance. A malformed conf value is
-    * rejected eagerly with the offending text in the message.
+  /** [[asofBackward]] pays its sampling job only past this many bytes
+    * of combined plan-stats size (256 MB — far below any input whose
+    * single key could break a partition sort, far above every test
+    * table).
     */
-  val ChunkWidthConf = "spark.graft.asof.chunkWidth"
+  private val AutoMinBytes = 256L << 20
 
-  /** `auto` pays its sampling job only past this many bytes of combined
-    * plan-stats size (default 256 MB — far below any input whose single
-    * key could break a partition sort, far above every test table).
+  /** [[asofBackward]] routes chunked when the estimated max per-key row
+    * count (left+right) crosses this (4M rows ≈ a few hundred MB of one
+    * partition's sort buffer — spill territory).
     */
-  val AutoMinBytesConf = "spark.graft.asof.autoMinBytes"
-
-  /** `auto` routes chunked when the estimated max per-key row count
-    * (left+right) crosses this (default 4M rows ≈ a few hundred MB of
-    * one partition's sort buffer — spill territory).
-    */
-  val AutoMaxKeyRowsConf = "spark.graft.asof.autoMaxKeyRows"
+  private val AutoMaxKeyRows = 4000000L
 
   private val AutoTargetChunkRows = 1000000L
   private val AutoSampleRows = 200000.0
 
-  private def longConf(df: DataFrame, key: String, dflt: Long): Long = {
-    val raw = df.sparkSession.conf.get(key, dflt.toString).trim
-    scala.util.Try(raw.toLong).getOrElse(throw new IllegalArgumentException(
-      s"$key must be a long, got: '$raw'"))
-  }
-
-  /** Auto-mode decision: Some(width) → route chunked. */
-  private def autoChunkWidth(left: DataFrame, right: DataFrame,
-      key: String, ts: String): Option[Long] = {
+  /** Routing decision of [[asofBackward]]: Some(width) → chunked. A FREE
+    * stats gate (`optimizedPlan.stats.sizeInBytes`, no job) keeps
+    * inputs under `minBytes` on the one-shuffle unchunked plan; past
+    * it, ONE bounded sampling job estimates the max per-key history and
+    * the ts range (the planning-time-sample idiom of RangeJoinRule's
+    * width estimate), and a key whose history would exceed `maxKeyRows`
+    * routes chunked with a width that splits it into
+    * ~[[AutoTargetChunkRows]]-row chunks. Streaming sides can't be
+    * sampled and keep the unchunked plan.
+    */
+  private[graft] def autoChunkWidth(left: DataFrame, right: DataFrame,
+      key: String, ts: String, minBytes: Long = AutoMinBytes,
+      maxKeyRows: Long = AutoMaxKeyRows): Option[Long] = {
     if (left.isStreaming || right.isStreaming) return None
     val bytes =
       left.queryExecution.optimizedPlan.stats.sizeInBytes +
         right.queryExecution.optimizedPlan.stats.sizeInBytes
-    val minBytes = longConf(left, AutoMinBytesConf, 256L << 20)
     // unknown stats propagate as astronomically large sizeInBytes
     // (defaultSizeInBytes products); treat those as "don't know" and
     // keep the old plan instead of paying a sampling job on every call
@@ -139,52 +120,34 @@ object AsofJoin {
       .head()
     if (perKey.isNullAt(0)) return None // empty sample
     val maxPerKey = (perKey.getLong(0) / frac).toLong
-    val maxKeyRows = longConf(left, AutoMaxKeyRowsConf, 4000000L)
     if (maxPerKey <= maxKeyRows) return None
     val range = math.max(1L, perKey.getLong(2) - perKey.getLong(1))
     val chunks = math.max(2L, maxPerKey / AutoTargetChunkRows)
     Some(math.max(1L, range / chunks))
   }
 
-  private def confChunkWidth(df: DataFrame): Option[Long] = {
-    df.sparkSession.conf.get(ChunkWidthConf, "auto").trim match {
-      case "auto" => None
-      case "off" => Some(0L)
-      case raw => scala.util.Try(raw.toLong).toOption match {
-        case Some(v) => Some(v)
-        case None => throw new IllegalArgumentException(
-          s"$ChunkWidthConf must be a long, 'auto', or 'off', got: '$raw'")
-      }
-    }
-  }
-
   /** `tolerance`: maximum allowed staleness `l.ts - r.ts` (same unit
     * as the ts column); a match older than that is nulled out — "don't
     * enrich with a quote from last year". None = unbounded (pure ASOF).
     *
-    * Auto-routing cost note (default `spark.graft.asof.chunkWidth =
-    * auto`): for inputs past [[AutoMinBytesConf]] (256 MB plan stats),
-    * construction of this DataFrame EAGERLY runs one bounded sampling
-    * job over both sides' (key, ts) to decide chunk routing — call it
-    * once and reuse the frame, or set the conf to `off`/a width to
-    * skip the probe. The ~200k-row uniform sample estimates the MAX
-    * per-key row count; at very high key cardinality it can miss a hot
-    * key and keep the unchunked plan (result-identical either way —
-    * the probe only picks between result-equal physical strategies).
+    * Routing: with a numeric ts, [[autoChunkWidth]] picks between this
+    * one-shuffle plan and [[asofBackwardChunked]] — the two are
+    * result-identical (spec-enforced), so routing never changes an
+    * answer, only whether one key's history may span partitions. For
+    * inputs past 256 MB of plan stats, construction of this DataFrame
+    * EAGERLY runs one bounded sampling job over both sides' (key, ts):
+    * call it once and reuse the frame, or call [[asofBackwardChunked]]
+    * with a width to skip the probe. The ~200k-row uniform sample
+    * estimates the MAX per-key row count; at very high key cardinality
+    * it can miss a hot key and keep the unchunked plan.
     */
   def asofBackward(left: DataFrame, right: DataFrame,
       key: String, ts: String, tolerance: Option[Long] = None): DataFrame = {
-    val conf = confChunkWidth(left) // validated eagerly even when not routable
     val tsNumeric = left.schema(ts).dataType.isInstanceOf[NumericType] &&
       right.schema(ts).dataType.isInstanceOf[NumericType]
-    if (tsNumeric) {
-      val width = conf match {
-        case Some(w) => if (w > 0) Some(w) else None // forced / off
-        case None => autoChunkWidth(left, right, key, ts)
-      }
-      if (width.isDefined)
-        return asofBackwardChunked(left, right, key, ts, width.get, tolerance)
-    }
+    val width = if (tsNumeric) autoChunkWidth(left, right, key, ts) else None
+    if (width.isDefined)
+      return asofBackwardChunked(left, right, key, ts, width.get, tolerance)
     val (leftCols, rightCols) = checkCols(left, right, key, ts)
     require(tolerance.isEmpty ||
       left.schema(ts).dataType.isInstanceOf[NumericType],

@@ -22,20 +22,21 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *            Generate(explode(sequence(floorDiv(lo,W), floorDiv(hi,W))), right),
   *            Inner, _graft_bin = _graft_bin_r)))
   *
-  * Opt-in: set `spark.graft.rangeJoin.binWidth` to a positive long
-  * (≈ the typical interval width), or to `auto` to estimate it at
-  * planning time as median(hi−lo)+1 over a bounded sample of the
-  * interval side (manual value = override; unset = rule off). Auto
-  * estimates are cached per (session, interval-side plan) so repeated
-  * (re-)optimizations don't re-run the sample job; within a session
-  * the chosen width — and therefore the plan shape — is stable. Across
-  * sessions the unordered sample can pick a different width; the
-  * rewrite is exact for ANY width, so that only moves performance,
-  * never rows. Accepted condition shapes: one lower bound (`>=` or
-  * `>`), one upper bound (`<=` or `<`) on the same point expression,
-  * plus optionally extra equality conjuncts `le = re` between the two
-  * sides (hand-written SQL often carries a key equality next to the
-  * range) — those become part of the equi-join key alongside the bin.
+  * Installed, the rule rewrites every matching join; the bin width W
+  * is estimated at planning time as median(hi−lo)+1 over a bounded
+  * sample of the interval side (a caller that knows its interval width
+  * passes `binWidth` to [[graft.operators.RangeJoin.pointInInterval]]
+  * instead). Estimates are cached per (session, interval-side plan) so
+  * repeated (re-)optimizations don't re-run the sample job; within a
+  * session the chosen width — and therefore the plan shape — is
+  * stable. Across sessions the unordered sample can pick a different
+  * width; the rewrite is exact for ANY width, so that only moves
+  * performance, never rows. Accepted condition shapes: one lower
+  * bound (`>=` or `>`), one upper bound (`<=` or `<`) on the same point
+  * expression, plus optionally extra equality conjuncts `le = re`
+  * between the two sides (hand-written SQL often carries a key equality
+  * next to the range) — those become part of the equi-join key
+  * alongside the bin.
   * Guards: integral types only, deterministic expressions, point side
   * = left, and no conjunct may touch a `_graft_bin*` attribute (so the
   * rule can never re-match its own rewritten join when later passes
@@ -48,18 +49,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   */
 object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  val ConfKey = "spark.graft.rangeJoin.binWidth"
-
-  /** Rows sampled from the interval side when the conf is `auto`. */
+  /** Rows sampled from the interval side to estimate the width. */
   private val SampleRows = 10000
 
-  /** Re-entrancy guard: the auto-width sample query runs through the
+  /** Re-entrancy guard: the width sample query runs through the
     * optimizer too — without this it could recurse into the rule.
     */
   private val estimating: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
-  /** `auto`-width cache, keyed by (session identity, canonicalized
+  /** Width cache, keyed by (session identity, canonicalized
     * interval-side plan, bounds): one sample job per distinct join
     * shape per session, not one per (re-)optimization — and a stable
     * width (= stable plan) for repeated queries within a session.
@@ -77,16 +76,13 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (estimating.get()) return plan
-    val confVal = conf.getConfString(ConfKey, "0").trim
-    val manual = scala.util.Try(confVal.toLong).toOption
-    if (confVal != "auto" && manual.forall(_ <= 0)) plan
-    else plan.transformUp {
+    plan.transformUp {
       case j @ Join(l, r, Inner, Some(cond), hint) =>
-        rewrite(l, r, cond, hint, confVal).getOrElse(j)
+        rewrite(l, r, cond, hint).getOrElse(j)
     }
   }
 
-  /** `auto` width: median (hi − lo) + 1 over a bounded sample of the
+  /** Bin width: median (hi − lo) + 1 over a bounded sample of the
     * interval side, executed as its own tiny query (the guard above
     * keeps the optimizer from re-entering). Estimation cost is one
     * LIMIT-10000 scan at planning time; the rewrite stays EXACT for
@@ -135,7 +131,7 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def rewrite(l: LogicalPlan, r: LogicalPlan, cond: Expression,
-      hint: JoinHint, confVal: String): Option[LogicalPlan] = {
+      hint: JoinHint): Option[LogicalPlan] = {
     // Never re-match our own output: after the rewrite, later passes can
     // push the exact re-filter back into the bin equi-join's condition —
     // the generated `_graft_bin*` attributes mark that join as ours.
@@ -185,19 +181,17 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         case EqualTo(a, b) if leftOnly(a) && rightOnly(b) => (a, b)
         case EqualTo(a, b) if rightOnly(a) && leftOnly(b) => (b, a)
       }
-      build(l, r, cond, hint, confVal, point, lo, hi, eqs)
+      build(l, r, cond, hint, point, lo, hi, eqs)
     }
   }
 
   private def build(l: LogicalPlan, r: LogicalPlan, cond: Expression,
-      hint: JoinHint, confVal: String, p1: Expression,
-      lo: Expression, hi: Expression,
+      hint: JoinHint, p1: Expression, lo: Expression, hi: Expression,
       eqs: Seq[(Expression, Expression)]): Option[LogicalPlan] = {
     if (!Seq(p1, lo, hi).forall(e => integral(e) && e.deterministic)) return None
-    // width AFTER all structural guards, so `auto` never samples for a
-    // join the rule would not rewrite anyway
-    val w = (if (confVal == "auto") estimateBinWidth(r, lo, hi)
-             else scala.util.Try(confVal.toLong).toOption.filter(_ > 0)) match {
+    // width AFTER all structural guards, so the rule never samples for
+    // a join it would not rewrite anyway
+    val w = estimateBinWidth(r, lo, hi) match {
       case Some(v) => v
       case None => return None
     }

@@ -600,6 +600,32 @@ object Streams {
     nearDupStreamIndexed(docs, nearDupIndex(corpus, id, text, n, bands, rows),
       id, text, n, bands, rows, threshold)
 
+  /** Column-metadata key carrying the hash family an index was banded
+    * with — survives persist/unpersist AND a parquet roundtrip (Spark
+    * stores field metadata in the parquet footer schema).
+    */
+  private val HashFamilyMetaKey = "graft.hashFamily"
+
+  /** The tagged index frame both persistence forms share: one (corpus
+    * id, shingle set, band index, band key) row per band, banded with
+    * md5 and the band-key column tagged `md5`.
+    */
+  private def indexFrame(corpus: DataFrame, id: String, text: String,
+      n: Int, bands: Int, rows: Int): DataFrame = {
+    import graft.dedup.Dedup
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString(HashFamilyMetaKey, "md5").build()
+    // the banded frame already carries each row's shingle set (_sh) —
+    // reusing it for the Jaccard verify saves the corpus a second
+    // shingle pass AND the (_cid) re-join the round-7 shape paid.
+    // The stream side reads its family off the tag, so an index read
+    // back from disk that was banded with another family is either
+    // matched with that family or rejected, never silently missed.
+    Dedup.bandedLong(corpus, id, text, n, bands, rows, Some(Dedup.Md5Hash))
+      .select(col("_id").as("_cid"), col("_sh").as("_csh"),
+        col("_bidx"), col("_bkey").as("_bkey", meta))
+  }
+
   /** The PERSISTED corpus band index [[nearDupStreamIndexed]] admits
     * against — the same artifact shape `dedup_incremental` joins a new
     * snapshot batch against: one (corpus id, shingle set, band index,
@@ -615,35 +641,6 @@ object Streams {
     * cache until session clear — fine for one-shot runs, wrong for a
     * long-lived driver, hence this explicit handle).
     */
-  /** Column-metadata key carrying the hash family an index was banded
-    * with — survives persist/unpersist AND a parquet roundtrip (Spark
-    * stores field metadata in the parquet footer schema).
-    */
-  private val HashFamilyMetaKey = "graft.hashFamily"
-
-  /** The tagged index frame both persistence forms share: one (corpus
-    * id, shingle set, band index, band key) row per band, band-key
-    * column tagged with the hash family in effect NOW.
-    */
-  private def indexFrame(corpus: DataFrame, id: String, text: String,
-      n: Int, bands: Int, rows: Int): DataFrame = {
-    import graft.dedup.Dedup
-    val famName = corpus.sparkSession.conf.get(Dedup.HashFamilyConf, "md5")
-    val hh = Dedup.hashFamily(corpus.sparkSession)
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(HashFamilyMetaKey, famName).build()
-    // the banded frame already carries each row's shingle set (_sh) —
-    // reusing it for the Jaccard verify saves the corpus a second
-    // shingle pass AND the (_cid) re-join the round-7 shape paid.
-    // The band-key column is TAGGED with the family in effect NOW: the
-    // stream side derives its family from the tag, so a session conf
-    // change between index build and stream build can no longer make
-    // band keys silently never match (r9 advice).
-    Dedup.bandedLong(corpus, id, text, n, bands, rows, Some(hh))
-      .select(col("_id").as("_cid"), col("_sh").as("_csh"),
-        col("_bidx"), col("_bkey").as("_bkey", meta))
-  }
-
   def nearDupIndex(corpus: DataFrame, id: String, text: String, n: Int = 3,
       bands: Int = 4, rows: Int = 3): DataFrame =
     indexFrame(corpus, id, text, n, bands, rows)
@@ -687,9 +684,8 @@ object Streams {
       threshold: Double = 0.8): DataFrame = {
     import graft.dedup.Dedup
     // band the ARRIVING rows with the family the INDEX was built with
-    // (carried in _bkey's column metadata) — not whatever the session
-    // conf says at stream-build time; untagged index (hand-built frame)
-    // falls back to the session conf as before
+    // (carried in _bkey's column metadata); an untagged index
+    // (hand-built frame) is taken to be md5, the family indexFrame bands
     val hh = corpusBands.schema.fields.find(_.name == "_bkey")
       .filter(_.metadata.contains(HashFamilyMetaKey))
       .map(_.metadata.getString(HashFamilyMetaKey)) match {
@@ -697,7 +693,7 @@ object Streams {
         case Some("xxhash64") => Dedup.XxHash
         case Some(other) => throw new IllegalArgumentException(
           s"near-dup index tagged with unknown hash family: $other")
-        case None => Dedup.hashFamily(corpusBands.sparkSession)
+        case None => Dedup.Md5Hash
       }
     val sBands = Dedup.bandedLong(docs, id, text, n, bands, rows, Some(hh))
     sBands.join(corpusBands, Seq("_bidx", "_bkey"))

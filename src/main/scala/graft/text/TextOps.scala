@@ -171,12 +171,14 @@ object TextOps {
 
   /** The word n-grams of the word-array column `w`, in order and with
     * repeats: the ' '-join of each n consecutive words. A doc shorter
-    * than n words yields one gram, its whole text. `w` must name a
-    * projected column — the law reads it twice.
+    * than n words yields one gram, its whole text; a NULL array (NULL
+    * text) yields NULL — no grams, so explode drops the doc, as
+    * [[tokenEntropy]] does. `w` must name a projected column — the law
+    * reads it more than once.
     */
   private[graft] def wordGrams(w: String, n: Int): Column = expr(
-    s"transform(sequence(1, greatest(size($w) - ${n - 1}, 1)), " +
-      s"i -> array_join(slice($w, i, $n), ' '))")
+    s"CASE WHEN $w IS NOT NULL THEN transform(sequence(1, greatest(size($w) - ${n - 1}, 1)), " +
+      s"i -> array_join(slice($w, i, $n), ' ')) END")
 
   /** Distinct word-n-gram set of a corpus (the probe side of
     * [[contamination]] and the streaming filter) — one explode +

