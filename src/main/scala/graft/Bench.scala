@@ -7,12 +7,27 @@ import java.nio.file.{Files, Paths}
   * full materialization by [[Harness.force]], and prints ONE JSON line.
   * Failures are reported per-query (elapsed = -1, error message
   * recorded), never swallowed as successes.
+  *
+  * Artifact schema ([[SchemaVersion]]): `queries` (min warm seconds),
+  * `cold` (first-repetition seconds), `solo`, `errors`, `n_failed`,
+  * `reps`, `pipelines_run`, `cpus`, `sf`; and per query the Spark jobs
+  * and generated-class compiles ([[Harness.Counter]]) of the cold
+  * repetition (`cold_jobs`, `cold_compiles`) and of the repetition the
+  * min warm time came from (`warm_jobs`, `warm_compiles`).
   */
 object Bench {
+  /** 2 added the job and compile maps and this field. */
+  val SchemaVersion = 2
+
+  /** One repetition: seconds (-1 on failure) and the jobs and compiles
+    * it ran. */
+  private final case class Rep(secs: Double, n: Harness.Counts)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.cpus
     val spark = Harness.session(cpus)
+    val counter = new Harness.Counter(spark)
 
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -33,17 +48,18 @@ object Bench {
     // cleared between reps, so a warm rep re-executes everything except
     // JVM compilation — it measures the operator, not the cache.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    // One timed, fully-materialized execution. Returns -1 and records
-    // the error on failure.
-    def timedRun(d: QueryDef): Double = {
+    // One timed, fully-materialized execution; a failure records its
+    // error.
+    def timedRun(d: QueryDef): Rep = {
+      val c0 = counter.now()
       val t0 = System.nanoTime()
       try {
         Harness.force(d.run(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
+        Rep((System.nanoTime() - t0) / 1e9, counter.now() - c0)
       } catch {
         case e: Throwable =>
           errors(d.name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          -1.0
+          Rep(-1.0, counter.now() - c0)
       } finally {
         // Queries run back-to-back in ONE JVM: any cached plan or
         // persisted/checkpointed RDD a query leaves behind slows every
@@ -54,10 +70,10 @@ object Bench {
       }
     }
     val results = selected.map { d =>
-      val times = (1 to reps).map(_ => timedRun(d))
+      val runs = (1 to reps).map(_ => timedRun(d))
       // min over the warm reps that succeeded; -1 only if they all failed
-      val warmReps = (if (times.size > 1) times.tail else times).filter(_ >= 0)
-      (d, times.head, if (warmReps.isEmpty) -1.0 else warmReps.min)
+      val warmReps = (if (runs.size > 1) runs.tail else runs).filter(_.secs >= 0)
+      (d, runs.head, warmReps.minByOption(_.secs).getOrElse(runs.last))
     }
     // The in-suite number for the slowest queries drifts with suite
     // contention (dedup_simhash once measured 8.56 s in-suite vs 2.48 s
@@ -66,22 +82,30 @@ object Bench {
     // other query's cleanup overlaps — and ship BOTH numbers, so a
     // delta between two artifacts is read against the solo number.
     val soloN = math.max(0, sys.env.getOrElse("SPARK_GRAFT_SOLO_N", "10").toInt)
-    val solo = results.filter(_._3 >= 0).sortBy(-_._3).take(soloN).map {
+    val solo = results.filter(_._3.secs >= 0).sortBy(-_._3.secs).take(soloN).map {
       case (d, _, _) =>
-        val ts = (1 to 3).map(_ => timedRun(d)).filter(_ >= 0)
+        val ts = (1 to 3).map(_ => timedRun(d).secs).filter(_ >= 0)
         (d.name, if (ts.isEmpty) -1.0 else ts.min)
     }
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     def obj(kv: Seq[(String, String)]): String =
       kv.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
-    val qs = obj(results.map { case (d, _, w) => d.name -> r3(w).toString })
-    val cold = obj(results.map { case (d, c, _) => d.name -> r3(c).toString })
+    def perQuery(f: (Rep, Rep) => String): String =
+      obj(results.map { case (d, c, w) => d.name -> f(c, w) })
+    val qs = perQuery((_, w) => r3(w.secs).toString)
+    val cold = perQuery((c, _) => r3(c.secs).toString)
+    val countsJson = Seq(
+      "cold_jobs" -> perQuery((c, _) => c.n.jobs.toString),
+      "cold_compiles" -> perQuery((c, _) => c.n.compiles.toString),
+      "warm_jobs" -> perQuery((_, w) => w.n.jobs.toString),
+      "warm_compiles" -> perQuery((_, w) => w.n.compiles.toString))
+      .map { case (k, v) => s""""$k":$v""" }.mkString(",")
     val soloJson = obj(solo.map { case (k, v) => k -> r3(v).toString })
     val errJson = obj(errors.toSeq.map { case (k, v) => k -> ("\"" + esc(v) + "\"") })
-    val total = results.collect { case (_, _, w) if w >= 0 => w }.sum
+    val total = results.collect { case (_, _, w) if w.secs >= 0 => w.secs }.sum
     val prJson = obj(selected.filter(_.pipelines > 1).map(d => d.name -> d.pipelines.toString))
     val json =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"cold":$cold,"solo":$soloJson,"errors":$errJson,"n_failed":${errors.size},"reps":$reps,"pipelines_run":$prJson,"cpus":$cpus,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","schema_version":$SchemaVersion,"value":${r3(total)},"unit":"sec","queries":$qs,"cold":$cold,$countsJson,"solo":$soloJson,"errors":$errJson,"n_failed":${errors.size},"reps":$reps,"pipelines_run":$prJson,"cpus":$cpus,"sf":"${esc(sfDir)}"}"""
     println(json)
     // Stdout captures have arrived truncated; persist the full artifact
     // to a file too. A failed write throws: a bench that cannot record
@@ -96,8 +120,8 @@ object Bench {
     // results that keeps the line under 1900 chars (a 277-entry map
     // cannot fit). "queries_omitted" counts the rest; the COMPLETE map
     // is the penultimate stdout line and BENCH_LAST.json.
-    val byTime = results.filter(_._3 >= 0).sortBy(-_._3)
-      .map { case (d, _, w) => "\"" + esc(d.name) + "\":" + r3(w) }
+    val byTime = results.filter(_._3.secs >= 0).sortBy(-_._3.secs)
+      .map { case (d, _, w) => "\"" + esc(d.name) + "\":" + r3(w.secs) }
     def finalLine(n: Int): String = {
       val qmap = byTime.take(n).mkString("{", ",", "}")
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${errors.size},"reps":$reps,"cpus":$cpus,"sf":"${esc(sfDir)}","queries_top":$qmap,"queries_omitted":${byTime.size - n},"solo":$soloJson,"full":"BENCH_LAST.json"}"""

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The one way graft's mains (Bench, Verify, tools.Probe, tools.Explain)
   * and its specs build a session and run a query. Spark classes only:
@@ -47,6 +50,36 @@ object Harness {
     val r = df.agg(coalesce(expr(s"bit_xor(xxhash64($cols))"), lit(0L)), count(lit(1)))
       .collect()(0)
     (r.getLong(0), r.getLong(1))
+  }
+
+  /** Spark jobs started and generated classes compiled. */
+  final case class Counts(jobs: Long, compiles: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, compiles - o.compiles)
+  }
+
+  /** Counts what queries on `spark` run: a job-start listener on its
+    * context, and Spark's codegen compilation count (JVM-wide). The
+    * difference of two readings around one query is its plan fan-out
+    * and its codegen-cache misses (a query whose distinct plans
+    * outnumber `spark.sql.codegen.cache.maxEntries`, 100 by default,
+    * compiles again on every repetition). `close` removes the listener.
+    */
+  final class Counter(spark: SparkSession) extends AutoCloseable {
+    private val sc = spark.sparkContext
+    private val jobs = new java.util.concurrent.atomic.AtomicLong()
+    private val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+
+    /** The totals so far, once the listener bus has delivered every
+      * queued event. */
+    def now(): Counts = {
+      Bridge.drainListeners(sc)
+      Counts(jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    }
+
+    def close(): Unit = sc.removeSparkListener(listener)
   }
 
   /** Drop every cached plan and persisted/checkpointed RDD block.

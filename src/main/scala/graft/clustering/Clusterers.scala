@@ -14,10 +14,16 @@ case class Membership(id: Long, cluster: Long)
   * re-expression of PyDI/entitymatching/post_clustering/
   * connected_components.py:19 (which delegates to networkx on one node).
   *
-  * Implementation: alternating large-star / small-star contraction
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-  * the standard O(log n)-round distributed CC. Each round is a groupBy
-  * min + self-join (single shuffle each); no per-node adjacency lists are
+  * Every clusterer decides its path from its input. One job with no
+  * shuffle reads at most [[LocalMaxEdges]] + 1 edges; when the graph
+  * fits, union-find solves it in one place on the driver (and the
+  * per-component kernels run there too), because on a small graph the
+  * distributed rounds are fixed per-job cost, not data work: 9 Spark
+  * jobs and over a second for a thousand match edges. Larger graphs
+  * take alternating large-star / small-star contraction (Kiveris et
+  * al., "Connected Components in MapReduce and Beyond") — the standard
+  * O(log n)-round distributed CC. Each round is a groupBy min +
+  * self-join (single shuffle each); no per-node adjacency lists are
   * ever collected, so mega-hubs stay partial-aggregable and AQE handles
   * skew. A plain label-propagation loop would need O(diameter) rounds —
   * this needs O(log n) regardless of chain length.
@@ -71,10 +77,83 @@ object Clusterers {
         (col("_x5").cast("double") / 100000.0).as("max_similarity"))
   }
 
+  /** Graphs with at most this many edges (duplicates and self-loops
+    * included) are clustered in one place: 65,536 edges are 1 MB of
+    * id pairs, a few MB as JVM objects on the driver. */
+  private[graft] val LocalMaxEdges = 65536
+
+  /** All rows of `rdd` if it has at most `max`, else None — from ONE job
+    * with no shuffle: each task returns its first `max + 1` rows, and
+    * the driver drops what it holds once the total passes `max`.
+    * Upstream shuffles of `rdd` are not recomputed when the caller goes
+    * on to run `rdd` itself.
+    */
+  private def fitting[T: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T], max: Int): Option[Array[T]] = {
+    val got = scala.collection.mutable.ArrayBuffer.empty[T]
+    var over = false
+    rdd.sparkContext.runJob(rdd, (it: Iterator[T]) => it.take(max + 1).toArray,
+      (_: Int, rows: Array[T]) => if (!over) {
+        got ++= rows
+        if (got.size > max) { over = true; got.clear() }
+      })
+    if (over) None else Some(got.toArray)
+  }
+
+  /** Union-find over `edges`: every endpoint of a non-self-loop edge →
+    * the minimum id of its component. Duplicate and reversed edges are
+    * harmless; a node seen only in self-loops gets no entry.
+    */
+  private def unionFind(edges: Iterator[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    edges.foreach { case (u, v) =>
+      if (u != v) {
+        val a = find(parent.getOrElseUpdate(u, u))
+        val b = find(parent.getOrElseUpdate(v, v))
+        // the smaller root survives, so every root is its component's min
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+    }
+    parent.keys.foreach(k => parent(k) = find(k))
+    parent
+  }
+
   /** edges (id1, id2) → one row per non-isolated node: (id, cluster)
-    * where cluster is the minimum node id in the component.
+    * where cluster is the minimum node id in the component. Self-loops
+    * and edges with a NULL endpoint are dropped.
     *
-    * The iterative fixpoint runs on RDDs, not Datasets, deliberately:
+    * Up to [[LocalMaxEdges]] edges, union-find labels the graph on the
+    * driver and the result is a local frame: one Spark job in all.
+    * Above it runs the RDD fixpoint [[starContraction]].
+    */
+  def connectedComponents(edgesIn: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponents(edgesIn, maxIter, LocalMaxEdges)
+
+  /** [[connectedComponents]] with the size rule's constant as an
+    * argument: `localMaxEdges = 0` forces the multi-round path. */
+  private[graft] def connectedComponents(edgesIn: DataFrame, maxIter: Int,
+      localMaxEdges: Int): DataFrame = {
+    val spark = edgesIn.sparkSession
+    import spark.implicits._
+    val raw = edgesIn
+      .select(col("id1").cast("long").as("u"), col("id2").cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+      .as[(Long, Long)].rdd
+    fitting(raw, localMaxEdges) match {
+      case Some(es) =>
+        unionFind(es.iterator).toSeq.sortBy(_._1).toDF("id", "cluster")
+      case None => starContraction(spark, raw, maxIter)
+    }
+  }
+
+  /** The large-star / small-star fixpoint over non-self-loop edges.
+    *
+    * It runs on RDDs, not Datasets, deliberately:
     * a Dataset loop re-analyzes, re-optimizes and re-Janino-compiles a
     * fresh plan every round (the round-4 bench spent more time in
     * per-round driver overhead than in the actual shuffles), and its
@@ -86,13 +165,9 @@ object Clusterers {
     * small-star regroup, dedup) regardless of graph size, still the
     * O(log n)-round Kiveris et al. contraction that scales to 100 TB.
     */
-  def connectedComponents(edgesIn: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edgesIn.sparkSession
+  private def starContraction(spark: org.apache.spark.sql.SparkSession,
+      raw: org.apache.spark.rdd.RDD[(Long, Long)], maxIter: Int): DataFrame = {
     import spark.implicits._
-    val raw = edgesIn
-      .select(col("id1").cast("long").as("u"), col("id2").cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .as[(Long, Long)].rdd
     // at most the session's shuffle partitions: a match frame that
     // inherits a many-file scan's partitioning would otherwise run
     // every round with one task per input file, however few the edges
@@ -165,44 +240,62 @@ object Clusterers {
   import ComponentKernels.Edge
 
   /** Group scored correspondences (id1, id2, score) by connected
-    * component and run a sequential kernel per component inside
-    * mapGroups. Components after blocking are bounded-size (SURVEY §5);
-    * the shuffle is a single hash partition on component id and AQE
-    * balances component-count skew.
+    * component and run a sequential kernel per component. An edge
+    * belongs to the component of its id1; an id1 seen only in
+    * self-loops has none, and its edges are dropped.
+    *
+    * The size rule of [[connectedComponents]] applies to the scored
+    * edges: up to `localMaxEdges` of them, union-find groups them on the
+    * driver and the kernel runs there per component (every kernel sorts
+    * its edges itself, so grouping order does not matter). Above it,
+    * the components come from the multi-round path and the kernel runs
+    * inside `flatMapGroups`. Components after blocking are bounded-size
+    * (SURVEY §5); the shuffle is a single hash partition on component
+    * id and AQE balances component-count skew.
     */
-  private def perComponent[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      scored: DataFrame, maxEdgesPerComponent: Int = 1000000)(
+  private[graft] def perComponent[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      scored: DataFrame, maxEdgesPerComponent: Int = 1000000,
+      localMaxEdges: Int = LocalMaxEdges)(
       kernel: Seq[Edge] => Seq[T]): org.apache.spark.sql.Dataset[T] = {
     val spark = scored.sparkSession
     import spark.implicits._
     implicit val enc: org.apache.spark.sql.Encoder[T] = org.apache.spark.sql.Encoders.product[T]
-    // r13: the scored-edge pipeline (blocking join + comparator
-    // projection) fed BOTH the component labeling and the kernel's edge
-    // join, so the whole scoring pass executed twice per query. One
-    // eager checkpoint of the narrow (id1, id2, score) frame — edges
-    // are candidate-bounded by blocking — runs it once; labels and the
-    // join both read the materialized blocks.
+    // OOM guard for pathological mega-components (blocking normally
+    // bounds size): keep the highest-score edges up to the cap rather
+    // than dying (deterministic: same sort as the kernels).
+    def capped(buf: Seq[Edge]): Seq[Edge] =
+      if (buf.size <= maxEdgesPerComponent) buf
+      else buf.sortBy(e => (-e.score, e.id1, e.id2)).take(maxEdgesPerComponent)
     val edgesN = scored.select(col("id1").cast("long"), col("id2").cast("long"),
-        col("score").cast("double"))
-      .localCheckpoint(true)
-    val labels = connectedComponents(edgesN)
-      .withColumnRenamed("id", "id1").withColumnRenamed("cluster", "comp")
-    edgesN
-      .join(labels, "id1")
-      .select(col("comp"), col("id1"), col("id2"), col("score"))
-      .as[CompEdge]
-      .groupByKey(_.comp)
-      .flatMapGroups { (_, it) =>
-        // OOM guard for pathological mega-components (blocking normally
-        // bounds size): keep the highest-score edges up to the cap
-        // rather than dying — truncation is logged via the row shape
-        // (deterministic: same sort as the kernels).
-        val buf = it.map(e => Edge(e.id1, e.id2, e.score)).toSeq
-        val edges =
-          if (buf.size <= maxEdgesPerComponent) buf
-          else buf.sortBy(e => (-e.score, e.id1, e.id2)).take(maxEdgesPerComponent)
-        kernel(edges).iterator
-      }
+      col("score").cast("double"))
+    fitting(edgesN.rdd, localMaxEdges) match {
+      case Some(rows) =>
+        val root = unionFind(rows.iterator.collect {
+          case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+        })
+        val byComp = rows.toSeq.filter(r => !r.isNullAt(0) && root.contains(r.getLong(0)))
+          .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .groupBy(e => root(e.id1))
+        spark.createDataset(byComp.toSeq.sortBy(_._1).flatMap { case (_, es) => kernel(capped(es)) })
+      case None =>
+        // r13: the scored-edge pipeline (blocking join + comparator
+        // projection) fed BOTH the component labeling and the kernel's
+        // edge join, so the whole scoring pass executed twice per query.
+        // One eager checkpoint of the narrow (id1, id2, score) frame —
+        // edges are candidate-bounded by blocking — runs it once; labels
+        // and the join both read the materialized blocks.
+        val checkpointed = edgesN.localCheckpoint(true)
+        val labels = connectedComponents(checkpointed, 25, 0)
+          .withColumnRenamed("id", "id1").withColumnRenamed("cluster", "comp")
+        checkpointed
+          .join(labels, "id1")
+          .select(col("comp"), col("id1"), col("id2"), col("score"))
+          .as[CompEdge]
+          .groupByKey(_.comp)
+          .flatMapGroups { (_, it) =>
+            kernel(capped(it.map(e => Edge(e.id1, e.id2, e.score)).toSeq)).iterator
+          }
+    }
   }
 
   /** CENTER clustering (centre_clusterer.py:117) → (id, centre). */

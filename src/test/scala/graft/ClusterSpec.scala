@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 import graft.clustering.{Clusterers, ComponentKernels}
@@ -8,27 +9,51 @@ import graft.clustering.ComponentKernels.Edge
 class ClusterSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** Reference labels: every endpoint of a non-self-loop edge → the
+    * minimum id of its component (quadratic, for small graphs). */
+  def ccReference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val es = edges.filter(e => e._1 != e._2)
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+    val parent = scala.collection.mutable.Map(nodes.map(v => v -> v): _*)
+    def find(x: Long): Long = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
+    es.foreach { case (a, b) => parent(find(a)) = find(b) }
+    nodes.map(v => v -> nodes.filter(u => find(u) == find(v)).min).toMap
+  }
+
+  def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Random edges over `n` ids centred on 0 (negative ids included),
+    * with self-loops and duplicated, reversed edges. */
+  def messyEdges(rnd: Random, n: Int, m: Int): Seq[(Long, Long)] = {
+    val base = Seq.fill(m)(((rnd.nextInt(n) - n / 2).toLong, (rnd.nextInt(n) - n / 2).toLong))
+    base ++ base.take(m / 5).map(_.swap) ++ base.take(m / 10) ++
+      Seq.fill(5)(rnd.nextInt(n).toLong).map(v => (v, v))
+  }
+
   test("connected components match union-find on random graphs") {
     val spark2 = spark
     import spark2.implicits._
     val rnd = new Random(7)
     for (trial <- 1 to 3) {
-      val n = 60
-      val edges = Seq.fill(50)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-      // union-find reference
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) => parent(find(a.toInt)) = find(b.toInt) }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val expect = nodes.map { v =>
-        val comp = nodes.filter(u => find(u.toInt) == find(v.toInt)).min
-        v -> comp
-      }.toMap
+      val edges = messyEdges(rnd, 60, 50)
+      val df = edges.toDF("id1", "id2")
+      val expect = ccReference(edges)
+      assert(labelMap(Clusterers.connectedComponents(df)) == expect, s"one-pass, trial $trial")
+      assert(labelMap(Clusterers.connectedComponents(df, 25, localMaxEdges = 0)) == expect,
+        s"multi-round, trial $trial")
+    }
+  }
 
-      val got = Clusterers.connectedComponents(edges.toDF("id1", "id2"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"trial $trial")
+  test("connected components of an empty edge frame: empty (long, long) labels on both paths") {
+    val spark2 = spark
+    import spark2.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
+    for (local <- Seq(Clusterers.LocalMaxEdges, 0)) {
+      val out = Clusterers.connectedComponents(empty, 25, local)
+      assert(out.count() == 0, s"localMaxEdges $local")
+      assert(out.schema.map(f => (f.name, f.dataType.typeName)) ==
+        Seq(("id", "long"), ("cluster", "long")), s"localMaxEdges $local")
     }
   }
 
@@ -36,16 +61,65 @@ class ClusterSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val rnd = new Random(11)
-    val edges = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong)).toDF("id1", "id2")
-    val wide = edges.repartition(48)
+    val raw = messyEdges(rnd, 300, 400)
+    val wide = raw.toDF("id1", "id2").repartition(48)
     assert(wide.rdd.getNumPartitions == 48)
-    def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val out = Clusterers.connectedComponents(wide)
-    assert(labels(out) == labels(Clusterers.connectedComponents(edges.coalesce(1))))
+    val out = Clusterers.connectedComponents(wide, 25, localMaxEdges = 0)
+    assert(labelMap(out) == ccReference(raw))
+    assert(labelMap(Clusterers.connectedComponents(wide)) == ccReference(raw))
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(out.rdd.getNumPartitions <= shufflePartitions,
       s"${out.rdd.getNumPartitions} label partitions for $shufflePartitions shuffle partitions")
+  }
+
+  test("connected components of a small graph run at most 2 Spark jobs") {
+    val spark2 = spark
+    import spark2.implicits._
+    val edges = messyEdges(new Random(5), 200, 300).toDF("id1", "id2")
+    val counter = new Harness.Counter(spark)
+    try {
+      val before = counter.now()
+      val labels = Clusterers.connectedComponents(edges).collect()
+      val ran = counter.now() - before
+      assert(labels.nonEmpty)
+      assert(ran.jobs <= 2, s"${ran.jobs} jobs")
+    } finally counter.close()
+  }
+
+  /** A random scored graph and the greedy 1:1 kernel run on each of its
+    * reference components, as (id1, id2, score) rows. */
+  def greedyCase(seed: Int): (DataFrame, Set[(Long, Long, Double)]) = {
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new Random(seed)
+    val scored = messyEdges(rnd, 80, 70).map { case (a, b) =>
+      (a, b, math.rint(rnd.nextDouble() * 20) / 20)
+    }
+    val comp = ccReference(scored.map(e => (e._1, e._2)))
+    val want = scored.filter(e => comp.contains(e._1))
+      .map(e => Edge(e._1, e._2, e._3)).groupBy(e => comp(e.id1)).values
+      .flatMap(ComponentKernels.greedyOneToOne).map(e => (e.id1, e.id2, e.score)).toSet
+    (scored.toDF("id1", "id2", "score"), want)
+  }
+
+  def greedyRows(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("greedy 1:1 per component, one-pass path: equals the kernel on each component") {
+    for (seed <- 1 to 3) {
+      val (scored, want) = greedyCase(seed)
+      val got = Clusterers.perComponent(scored)(ComponentKernels.greedyOneToOne).toDF()
+      assert(greedyRows(got) == want, s"seed $seed")
+    }
+  }
+
+  test("greedy 1:1 per component, multi-round path: equals the kernel on each component") {
+    for (seed <- 1 to 3) {
+      val (scored, want) = greedyCase(seed)
+      val got = Clusterers.perComponent(scored, localMaxEdges = 0)(
+        ComponentKernels.greedyOneToOne).toDF()
+      assert(greedyRows(got) == want, s"seed $seed")
+    }
   }
 
   test("greedy 1:1 kernel: highest-score-first, no node reuse") {

@@ -91,13 +91,16 @@ class Round5Spec extends AnyFunSuite {
     // chain 0-1-2-3-4, duplicate + reversed edges, self loop, isolated pair
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 3L), (2L, 2L),
       (1L, 0L), (10L, 11L)).toDF("id1", "id2")
-    val got = Clusterers.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L,
-      10L -> 10L, 11L -> 10L))
-    // all-self-loop input → empty labeling (no non-isolated nodes)
     val selfOnly = Seq((5L, 5L)).toDF("id1", "id2")
-    assert(Clusterers.connectedComponents(selfOnly).count() == 0)
+    // the fixpoint (localMaxEdges = 0) and the one-pass union-find
+    for (local <- Seq(0, Clusterers.LocalMaxEdges)) {
+      val got = Clusterers.connectedComponents(edges, 25, local)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L,
+        10L -> 10L, 11L -> 10L), s"localMaxEdges $local")
+      // all-self-loop input → empty labeling (no non-isolated nodes)
+      assert(Clusterers.connectedComponents(selfOnly, 25, local).count() == 0)
+    }
   }
 
   test("runEngine keeps clusters whose voting attribute is entirely null") {

@@ -20,7 +20,8 @@ class ScaleStressSpec extends AnyFunSuite {
     val edges = spark.range(n - 1).select(
       org.apache.spark.sql.functions.col("id").as("id1"),
       (org.apache.spark.sql.functions.col("id") + 1).as("id2"))
-    val labels = Clusterers.connectedComponents(edges, maxIter = 25)
+    // localMaxEdges = 0: the star contraction, whatever the edge count
+    val labels = Clusterers.connectedComponents(edges, maxIter = 25, localMaxEdges = 0)
     val distinctClusters = labels.select("cluster").distinct().collect()
     assert(distinctClusters.length == 1 && distinctClusters(0).getLong(0) == 0L)
     assert(labels.count() == n)
@@ -40,7 +41,8 @@ class ScaleStressSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.col("id").as("id1"),
       (org.apache.spark.sql.functions.col("id") + 1).as("id2"))
     val bridge = Seq((0L, n.toLong)).toDF("id1", "id2")
-    val labels = Clusterers.connectedComponents(star.union(tail).union(bridge))
+    val labels = Clusterers.connectedComponents(star.union(tail).union(bridge), 25,
+      localMaxEdges = 0)
     assert(labels.select("cluster").distinct().count() == 1)
     assert(labels.count() == n + 1001)
   }
