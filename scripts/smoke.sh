@@ -1,12 +1,9 @@
 #!/bin/bash
-# Fast pre-commit smoke gate: every registered query must run at sf0.001
-# and return rows (SimSpec), and the registry must stay in sync with
-# SURVEY.md / oracle declarations (DocSyncSpec).
-#
-# This exists because two consecutive rounds shipped a final commit that
-# broke the suite: a new query that was oracle-green at sf0.01 returned
-# an empty frame at sf0.001 and redded the smoke test. ~2 min vs the
-# ~25 min full suite.
+# Fast pre-commit smoke gate: the similarity kernels must hold their
+# known values (SimSpec), and the registry must stay in sync with
+# SURVEY.md / oracle declarations (DocSyncSpec). That every registered
+# query returns rows at sf0.001 is checked by InvarianceSpec, which runs
+# the whole registry in the full suite (~9 min of its ~25).
 #
 # r10: the original version piped sbt through `tail -20`, so the
 # pipeline's exit status was tail's (always 0) and `set -e` never saw

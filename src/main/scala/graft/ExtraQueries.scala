@@ -1304,20 +1304,14 @@ object ExtraQueries {
         sims.numericAbsSim(col("l_bal"), col("r_bal"), 1000.0) -> 0.2),
       threshold = 0.97).select("id1", "id2")
     val cc = graft.clustering.Clusterers.connectedComponents(matches)
-    // plain record sides for the fusion half: four aggregation consumers
-    // re-paid the spread exchange each (r13 bench 3.60→7.90 s); only the
+    // plain record sides for the fusion half: each aggregation consumer
+    // re-paid the spread exchange (r13 bench 3.60→7.90 s); only the
     // blocking+comparator half above amortizes it
     val recs = EmScenario.custLPlain(s, dir).unionByName(EmScenario.custRPlain(s, dir))
     val wc = recs.join(cc, Seq("id"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col("id")))
-    val name = graft.fusion.Fusion.stringResolvers(wc, "cluster", "name")
-      .select(col("cluster"), col("longest").as("name"))
-    val bal = graft.fusion.Fusion.numericResolvers(wc, "cluster", cents(col("bal")))
-      .select(col("cluster"), col("avg_value").as("bal"))
-    val seg = graft.fusion.Fusion.voting(wc, "cluster", "seg").select("cluster", "seg")
-    val rest = wc.groupBy("cluster")
-      .agg(min(col("nat")).as("nat"), count(lit(1)).as("n_records"))
-    name.join(bal, "cluster").join(seg, "cluster").join(rest, "cluster")
+    graft.fusion.Fusion.runEngine(wc, "cluster", Seq("name" -> "longest_string",
+        "bal" -> "average", "seg" -> "voting", "nat" -> "earliest"))
       .orderBy("cluster")
   }
 

@@ -27,8 +27,6 @@ object Ann {
 
   def norm(a: Column, dim: Int): Column = sqrt(dot(a, a, dim))
 
-  def md5hex(s: String): String = graft.functions.VecKernels.md5hex(s)
-
   /** Hyperplane sign for (plane j, 1-based dim d): +1 iff the first md5
     * hex digit of "j-d" is ≥ '8'.
     */

@@ -19,9 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * one dedup run would otherwise crowd out every later job's memory.
   *
   * Hashes are md5-hex-prefix based so the DuckDB oracle can replay the
-  * pipeline bit-for-bit; passing `hashHex = Some(XxHash)` substitutes
-  * xxhash64, trading oracle parity for raw speed at 100 TB (the join
-  * shapes are identical).
+  * pipeline bit-for-bit.
   */
 object Dedup {
 
@@ -144,68 +142,48 @@ object Dedup {
         (col("id") === col("canonical_id")).as("keep"))
   }
 
-  /** Hash families for the minhash signatures, chosen per call by the
-    * `hashHex` argument. md5 is the DuckDB-replayable oracle-parity
-    * default; xxhash64 is ~5-10× cheaper per shingle and the right
-    * choice on a real cluster (identical join shapes, no oracle).
-    */
-  val Md5Hash: (Int, Column) => Column =
-    (i, s) => substring(md5(concat(lit(s"$i#"), s)), 1, 8)
-  val XxHash: (Int, Column) => Column =
-    (i, s) => format_string("%016x", xxhash64(lit(i), s))
-
-  /** MinHash band keys of a shingle-set column: `bands` keys, each the
-    * ':'-join of `rows` minima, minhash_i = lexicographic min over the
-    * doc's shingles of hashᵢ(shingle). String min avoids engine-specific
-    * hex→int casts while keeping the uniform-permutation behavior of the
-    * hash family. NULL on an empty shingle set, so posexplode emits no
-    * band row for a doc shorter than n words (all-null keys would
-    * otherwise bucket every such doc together).
-    *
-    * md5 and xxhash64 run as ONE codegen'd kernel call that references
-    * the shingle set once (graft.functions.minhash.bandKeys —
-    * bit-identical to the declarative law, see the kernel's scaladoc).
-    * Its declarative form — k `array_min(transform(...))` projections —
-    * collapsed with the shingle projection and re-evaluated the shingle
-    * construction k+1 times per row (6.4 s of banding vs 0.8 s for one
-    * shingling pass at sf0.1, r9), and its lambdas are interpreted. A
-    * custom family keeps that declarative form: correct, not fast.
-    */
-  private def bandKeysOf(sh: Column, bands: Int, rows: Int,
-      hh: (Int, Column) => Column): Column =
-    if (hh eq Md5Hash) graft.functions.minhash.bandKeys(sh, bands, rows, md5Family = true)
-    else if (hh eq XxHash) graft.functions.minhash.bandKeys(sh, bands, rows, md5Family = false)
-    else when(size(sh) > 0, array((0 until bands).map { b =>
-      concat_ws(":", (0 until rows).map(r =>
-        array_min(transform(sh, s => hh(b * rows + r, s)))): _*)
-    }: _*))
-
   /** Long-form banded MinHash signatures — one (id, shingles, band
-    * index, band key) row per band, computed ENTIRELY per row before a
-    * single posexplode: no groupBy, no window, no self-reference. This
-    * is the streaming-safe projection of the banding (a stateless
-    * narrow op per micro-batch), and the band frame a deployment
-    * persists as its incremental near-dup index.
+    * index, band key) row per band (band keys as in [[withBandKeys]]),
+    * computed ENTIRELY per row before a single posexplode: no groupBy,
+    * no window, no self-reference. This is the streaming-safe
+    * projection of the banding (a stateless narrow op per micro-batch),
+    * and the band frame a deployment persists as its incremental
+    * near-dup index.
     */
   def bandedLong(docs: DataFrame, id: String, text: String, n: Int = 3,
-      bands: Int = 4, rows: Int = 3,
-      hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    val hh = hashHex.getOrElse(Md5Hash)
+      bands: Int = 4, rows: Int = 3): DataFrame = {
     // no size(_sh) > 0 filter: empty shingle sets get NULL band keys and
     // posexplode drops those rows — the filter form was pushed below the
     // projection and inlined the whole interpreted shingle chain per row
     // (r9 plan audit)
     shingleFrame(docs, id, text, n).select(col("_id"), col("_sh"),
-      posexplode(bandKeysOf(col("_sh"), bands, rows, hh)).as(Seq("_bidx", "_bkey")))
+      posexplode(graft.functions.minhash.bandKeys(col("_sh"), bands, rows))
+        .as(Seq("_bidx", "_bkey")))
   }
 
-  /** A shingle frame (_id, _sh) with its band keys `_bk` beside it. A
-    * caller that persists this frame computes every doc's band keys
-    * once, however many joins read them.
+  /** A shingle frame (_id, _sh) with its MinHash band keys `_bk` beside
+    * it. A caller that persists this frame computes every doc's band
+    * keys once, however many joins read them.
+    *
+    * Band keys: `bands` keys, each the ':'-join of `rows` minima,
+    * minhash_i = lexicographic min over the doc's shingles of
+    * hashᵢ(shingle) = the first 8 hex chars of md5("i#" ∥ shingle).
+    * String min avoids engine-specific hex→int casts while keeping the
+    * uniform-permutation behavior of the hash. NULL on an empty shingle
+    * set, so posexplode emits no band row for a doc shorter than n words
+    * (all-null keys would otherwise bucket every such doc together).
+    *
+    * ONE codegen'd kernel call that references the shingle set once
+    * (graft.functions.minhash.bandKeys — bit-identical to the
+    * declarative law, see the kernel's scaladoc). The declarative form —
+    * k `array_min(transform(...))` projections — collapsed with the
+    * shingle projection and re-evaluated the shingle construction k+1
+    * times per row (6.4 s of banding vs 0.8 s for one shingling pass at
+    * sf0.1, r9), and its lambdas are interpreted.
     */
-  private[graft] def withBandKeys(sh: DataFrame, bands: Int, rows: Int,
-      hh: (Int, Column) => Column): DataFrame =
-    sh.select(col("_id"), col("_sh"), bandKeysOf(col("_sh"), bands, rows, hh).as("_bk"))
+  private[graft] def withBandKeys(sh: DataFrame, bands: Int, rows: Int): DataFrame =
+    sh.select(col("_id"), col("_sh"),
+      graft.functions.minhash.bandKeys(col("_sh"), bands, rows).as("_bk"))
 
   /** The LSH bucket join over two [[withBandKeys]] frames: each side
     * posexplodes to one (_id, _bidx, _bkey) row per band, then ONE
@@ -247,20 +225,16 @@ object Dedup {
     * rows) selection at scale.
     */
   def minhashCandidates(docs: DataFrame, id: String, text: String,
-      n: Int = 3, bands: Int = 4, rows: Int = 3,
-      hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    minhashCandidatesFrom(shingleFrame(docs, id, text, n), bands, rows,
-      hashHex.getOrElse(Md5Hash))
-  }
+      n: Int = 3, bands: Int = 4, rows: Int = 3): DataFrame =
+    minhashCandidatesFrom(shingleFrame(docs, id, text, n), bands, rows)
 
   /** [[minhashCandidates]] body over a PREPARED shingle frame, read
     * once: its band keys are persisted for the two sides of the band
     * join and released here. The result is localCheckpoint-ed (eager),
     * so the caller may unpersist the input immediately after.
     */
-  def minhashCandidatesFrom(sh: DataFrame, bands: Int, rows: Int,
-      hh: (Int, Column) => Column): DataFrame = {
-    val b = withBandKeys(sh, bands, rows, hh).persist(StorageLevel.MEMORY_AND_DISK)
+  def minhashCandidatesFrom(sh: DataFrame, bands: Int, rows: Int): DataFrame = {
+    val b = withBandKeys(sh, bands, rows).persist(StorageLevel.MEMORY_AND_DISK)
     try bandJoin(b, b, self = true).localCheckpoint(true)
     finally b.unpersist(false)
   }
@@ -286,7 +260,7 @@ object Dedup {
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
           // both localCheckpoint-ed eagerly inside, so unpersist is safe
-          (minhashCandidatesFrom(sh, bands, rows, Md5Hash),
+          (minhashCandidatesFrom(sh, bands, rows),
             ngramJaccardFrom(shSorted, threshold).select("id1", "id2"))
         } finally shSorted.unpersist(false)
       } finally sh.unpersist(false)
@@ -308,12 +282,10 @@ object Dedup {
     * candidates are verified with the true shingle Jaccard.
     */
   def minhashLsh(docs: DataFrame, id: String, text: String, n: Int = 3,
-      bands: Int = 4, rows: Int = 3, threshold: Double = 0.8,
-      hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    val hh = hashHex.getOrElse(Md5Hash)
+      bands: Int = 4, rows: Int = 3, threshold: Double = 0.8): DataFrame = {
     // Persisted: read by both sides of the band join AND both
     // verification joins. Released in the finally below.
-    val sh = withBandKeys(shingleFrame(docs, id, text, n), bands, rows, hh)
+    val sh = withBandKeys(shingleFrame(docs, id, text, n), bands, rows)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try verified(bandJoin(sh, sh, self = true), sh, sh, threshold)
     finally sh.unpersist(false)
@@ -331,10 +303,8 @@ object Dedup {
     */
   def minhashLshAgainst(left: DataFrame, right: DataFrame, id: String,
       text: String, n: Int = 3, bands: Int = 4, rows: Int = 3,
-      threshold: Double = 0.8,
-      hashHex: Option[(Int, Column) => Column] = None): DataFrame = {
-    val hh = hashHex.getOrElse(Md5Hash)
-    def banded(d: DataFrame) = withBandKeys(shingleFrame(d, id, text, n), bands, rows, hh)
+      threshold: Double = 0.8): DataFrame = {
+    def banded(d: DataFrame) = withBandKeys(shingleFrame(d, id, text, n), bands, rows)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val shL = banded(left)
     val shR = banded(right)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the MinHash band-key computation over a shingle
@@ -20,18 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * alternative references `_sh` once but higher-order lambdas are
   * interpreted (NamedLambdaVariable indirection per element — measured
   * 2× WORSE). This kernel is the same arithmetic as the declarative
-  * form, bit-for-bit:
+  * form, bit-for-bit.
   *
-  *  - md5 family: hash_i(s) = first 8 hex chars of md5(utf8("i#" ++ s)).
-  *    Fixed-width lowercase hex means lexicographic min ≡ unsigned min
-  *    of the first 4 digest bytes — tracked as an unsigned int, hex
-  *    rendered once at the end. The DuckDB oracle replays
-  *    `min(substr(md5('i#' || shg), 1, 8))` verbatim.
-  *  - xxhash64 family: hash_i(s) = "%016x" of Spark's
-  *    xxhash64(int i, string s) (seed 42, chained exactly like the
-  *    XxHash64 expression — delegated to XxHash64Function so parity is
-  *    by construction, not by reimplementation). Fixed-width hex ≡
-  *    unsigned-long min.
+  * The one hash family is md5: hash_i(s) = first 8 hex chars of
+  * md5(utf8("i#" ++ s)). Fixed-width lowercase hex means lexicographic
+  * min ≡ unsigned min of the first 4 digest bytes — tracked as an
+  * unsigned int, hex rendered once at the end. The DuckDB oracle
+  * replays `min(substr(md5('i#' || shg), 1, 8))` verbatim.
   */
 object MinhashKernels {
   private val tlMd5 = new ThreadLocal[java.security.MessageDigest] {
@@ -46,27 +41,11 @@ object MinhashKernels {
     prefixCache.computeIfAbsent(k,
       (kk: Integer) => Array.tabulate(kk)(j => s"$j#".getBytes("UTF-8")))
 
-  // xxhash64 family: hash of the band index j alone depends only on
-  // (j, k-independent seed 42) — memoized like the md5 prefixes
-  private val xxSeedCache =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
-
-  private def xxSeeds(k: Int): Array[Long] =
-    xxSeedCache.computeIfAbsent(k, (kk: Integer) => Array.tabulate(kk) { j =>
-      org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(j, IntegerType, 42L)
-    })
-
   private val HexChars = "0123456789abcdef".toCharArray
 
   private def hex8(v: Int, sb: java.lang.StringBuilder): Unit = {
     var shift = 28
     while (shift >= 0) { sb.append(HexChars((v >>> shift) & 0xf)); shift -= 4 }
-  }
-
-  private def hex16(v: Long, sb: java.lang.StringBuilder): Unit = {
-    var shift = 60
-    while (shift >= 0) { sb.append(HexChars(((v >>> shift) & 0xf).toInt)); shift -= 4 }
   }
 
   /** Distinct n-word shingles from a word array — the same law as the
@@ -114,80 +93,47 @@ object MinhashKernels {
       .asInstanceOf[Array[AnyRef]])
   }
 
-  /** Band keys for one shingle set; md5Family=false → xxhash64.
+  /** Band keys for one shingle set.
     * EMPTY shingle set → null: posexplode then emits no rows, which is
     * exactly the old `filter(size(_sh) > 0)` semantics without a Filter
     * node for the optimizer to push below the shingle projection.
     */
-  def bandKeys(sh: ArrayData, bands: Int, rows: Int, md5Family: Boolean): ArrayData = {
+  def bandKeys(sh: ArrayData, bands: Int, rows: Int): ArrayData = {
     val k = bands * rows
     val n = sh.numElements()
     if (n == 0) return null
+    val pfx = prefixes(k)
+    val digest = tlMd5.get()
+    val mins = new Array[Int](k)
+    java.util.Arrays.fill(mins, -1) // 0xffffffff = unsigned max
+    var i = 0
+    while (i < n) {
+      val sBytes = sh.getUTF8String(i).getBytes
+      var j = 0
+      while (j < k) {
+        digest.reset()
+        digest.update(pfx(j))
+        digest.update(sBytes)
+        val d = digest.digest()
+        val h = ((d(0) & 0xff) << 24) | ((d(1) & 0xff) << 16) |
+          ((d(2) & 0xff) << 8) | (d(3) & 0xff)
+        if (java.lang.Integer.compareUnsigned(h, mins(j)) < 0) mins(j) = h
+        j += 1
+      }
+      i += 1
+    }
     val out = new Array[AnyRef](bands)
-    if (md5Family) {
-      val pfx = prefixes(k)
-      val digest = tlMd5.get()
-      val mins = new Array[Int](k)
-      java.util.Arrays.fill(mins, -1) // 0xffffffff = unsigned max
-      var i = 0
-      while (i < n) {
-        val sBytes = sh.getUTF8String(i).getBytes
-        var j = 0
-        while (j < k) {
-          digest.reset()
-          digest.update(pfx(j))
-          digest.update(sBytes)
-          val d = digest.digest()
-          val h = ((d(0) & 0xff) << 24) | ((d(1) & 0xff) << 16) |
-            ((d(2) & 0xff) << 8) | (d(3) & 0xff)
-          if (java.lang.Integer.compareUnsigned(h, mins(j)) < 0) mins(j) = h
-          j += 1
-        }
-        i += 1
+    var b = 0
+    while (b < bands) {
+      val sb = new java.lang.StringBuilder(rows * 9)
+      var r = 0
+      while (r < rows) {
+        if (r > 0) sb.append(':')
+        hex8(mins(b * rows + r), sb)
+        r += 1
       }
-      var b = 0
-      while (b < bands) {
-        val sb = new java.lang.StringBuilder(rows * 9)
-        var r = 0
-        while (r < rows) {
-          if (r > 0) sb.append(':')
-          hex8(mins(b * rows + r), sb)
-          r += 1
-        }
-        out(b) = UTF8String.fromString(sb.toString)
-        b += 1
-      }
-    } else {
-      import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      val seeds = xxSeeds(k)
-      val mins = new Array[Long](k)
-      java.util.Arrays.fill(mins, -1L)
-      var i = 0
-      while (i < n) {
-        val s = sh.getUTF8String(i)
-        var j = 0
-        while (j < k) {
-          // exactly Spark's xxhash64(lit(j), s): seed 42, children
-          // chained — the j-only prefix hash is memoized per k (it was
-          // recomputed n·k times per row; r9 advice)
-          val h = XxHash64Function.hash(s, StringType, seeds(j))
-          if (java.lang.Long.compareUnsigned(h, mins(j)) < 0) mins(j) = h
-          j += 1
-        }
-        i += 1
-      }
-      var b = 0
-      while (b < bands) {
-        val sb = new java.lang.StringBuilder(rows * 17)
-        var r = 0
-        while (r < rows) {
-          if (r > 0) sb.append(':')
-          hex16(mins(b * rows + r), sb)
-          r += 1
-        }
-        out(b) = UTF8String.fromString(sb.toString)
-        b += 1
-      }
+      out(b) = UTF8String.fromString(sb.toString)
+      b += 1
     }
     new GenericArrayData(out)
   }
@@ -196,20 +142,20 @@ object MinhashKernels {
 /** `array<string>` shingles → `array<string>` of `bands` band keys
   * (null on an empty shingle set — see [[MinhashKernels.bandKeys]]).
   */
-case class MinhashBandKeys(child: Expression, bands: Int, rows: Int,
-    md5Family: Boolean) extends UnaryExpression {
+case class MinhashBandKeys(child: Expression, bands: Int, rows: Int)
+    extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_band_keys"
 
   override def nullSafeEval(v: Any): Any =
-    MinhashKernels.bandKeys(v.asInstanceOf[ArrayData], bands, rows, md5Family)
+    MinhashKernels.bandKeys(v.asInstanceOf[ArrayData], bands, rows)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // nullSafeCodeGen so the kernel's null return (empty shingle set)
     // propagates: defineCodeGen assumes a non-null result
     nullSafeCodeGen(ctx, ev, v => s"""
-      ${ev.value} = graft.functions.MinhashKernels.bandKeys($v, $bands, $rows, $md5Family);
+      ${ev.value} = graft.functions.MinhashKernels.bandKeys($v, $bands, $rows);
       ${ev.isNull} = (${ev.value} == null);
     """)
   }
@@ -235,8 +181,8 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object minhash {
-  def bandKeys(sh: Column, bands: Int, rows: Int, md5Family: Boolean): Column =
-    Bridge.column(MinhashBandKeys(Bridge.expression(sh), bands, rows, md5Family))
+  def bandKeys(sh: Column, bands: Int, rows: Int): Column =
+    Bridge.column(MinhashBandKeys(Bridge.expression(sh), bands, rows))
   def wordShingles(w: Column, n: Int): Column =
     Bridge.column(WordShingles(Bridge.expression(w), n))
 }

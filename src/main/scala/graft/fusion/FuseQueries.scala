@@ -486,7 +486,10 @@ object FuseQueries {
   /** Pre-fusion conflict preview (analysis.py:270): the first 50 A↔B
     * pairs with every attribute whose stringified values differ. Price
     * goes through DECIMAL(18,2) so both engines render the identical
-    * string (raw double→string is engine-formatted).
+    * string (raw double→string is engine-formatted). The oracle's
+    * sample join `j` is MATERIALIZED so DuckDB joins the 50-row sample
+    * first: inlined, it pushed `trim(value1) <> trim(value2)` into the
+    * join and built a 160.7M-row nested-loop join of A × B (~4 GB peak).
     */
   def fuseConflictsPreview(s: SparkSession, dir: String): DataFrame = {
     val src = sources(s, dir)
@@ -510,7 +513,7 @@ object FuseQueries {
        |corr AS (SELECT cluster AS id1, cluster AS id2,
        |                CAST(90 + cluster % 10 AS DOUBLE) / 100 AS score
        |         FROM a ORDER BY cluster LIMIT 50),
-       |j AS (SELECT corr.id1, corr.id2, corr.score,
+       |j AS MATERIALIZED (SELECT corr.id1, corr.id2, corr.score,
        |        a.status AS ls, a.price AS lp, a.odate AS lod, a.prio AS lpr,
        |        b.status AS rs, b.price AS rp, b.odate AS rod, b.prio AS rpr
        |      FROM corr JOIN a ON a.cluster = corr.id1

@@ -192,19 +192,18 @@ object Fusion {
           aggs += min(when(v.isNotNull, struct(key.as("k"), v.as("v")))).as(s"_p$i")
           posts += attr -> col(s"_p$i.v")
         case "average" | "median" | "maximum" | "minimum" | "sum" =>
+          // only the aggregate(s) this strategy's output reads
           val c = graft.Tables.cents(v)
-          aggs += sum(c).as(s"_sum$i")
-          aggs += count(when(c.isNotNull, lit(1))).as(s"_n$i")
-          aggs += percentile(c, lit(0.5)).as(s"_med$i")
-          aggs += max(c).as(s"_max$i")
-          aggs += min(c).as(s"_min$i")
-          posts += attr -> (strategy match {
-            case "average" => round(col(s"_sum$i") / 100.0 / col(s"_n$i"), 5)
-            case "median" => round(col(s"_med$i") / 100.0, 5)
-            case "maximum" => round(col(s"_max$i") / 100.0, 5)
-            case "minimum" => round(col(s"_min$i") / 100.0, 5)
-            case _ => round(col(s"_sum$i") / 100.0, 5)
-          })
+          def agg(a: Column): Column = { aggs += a.as(s"_a$i"); col(s"_a$i") }
+          posts += attr -> round(strategy match {
+            case "average" =>
+              aggs += count(when(c.isNotNull, lit(1))).as(s"_n$i")
+              agg(sum(c)) / 100.0 / col(s"_n$i")
+            case "median" => agg(percentile(c, lit(0.5))) / 100.0
+            case "maximum" => agg(max(c)) / 100.0
+            case "minimum" => agg(min(c)) / 100.0
+            case _ => agg(sum(c)) / 100.0
+          }, 5)
         case "most_recent" =>
           aggs += max(v).as(s"_d$i"); posts += attr -> col(s"_d$i")
         case "earliest" =>

@@ -618,10 +618,10 @@ object Streams {
     // the banded frame already carries each row's shingle set (_sh) —
     // reusing it for the Jaccard verify saves the corpus a second
     // shingle pass AND the (_cid) re-join the round-7 shape paid.
-    // The stream side reads its family off the tag, so an index read
-    // back from disk that was banded with another family is either
-    // matched with that family or rejected, never silently missed.
-    Dedup.bandedLong(corpus, id, text, n, bands, rows, Some(Dedup.Md5Hash))
+    // The stream side checks the tag, so an index read back from disk
+    // that was banded with another family is rejected, never silently
+    // missed.
+    Dedup.bandedLong(corpus, id, text, n, bands, rows)
       .select(col("_id").as("_cid"), col("_sh").as("_csh"),
         col("_bidx"), col("_bkey").as("_bkey", meta))
   }
@@ -683,19 +683,17 @@ object Streams {
       id: String, text: String, n: Int = 3, bands: Int = 4, rows: Int = 3,
       threshold: Double = 0.8): DataFrame = {
     import graft.dedup.Dedup
-    // band the ARRIVING rows with the family the INDEX was built with
-    // (carried in _bkey's column metadata); an untagged index
+    // the ARRIVING rows are banded with md5, so the INDEX must have
+    // been too: its family rides in _bkey's column metadata, and an
+    // index read back from disk is outside input. An untagged index
     // (hand-built frame) is taken to be md5, the family indexFrame bands
-    val hh = corpusBands.schema.fields.find(_.name == "_bkey")
+    corpusBands.schema.fields.find(_.name == "_bkey")
       .filter(_.metadata.contains(HashFamilyMetaKey))
-      .map(_.metadata.getString(HashFamilyMetaKey)) match {
-        case Some("md5") => Dedup.Md5Hash
-        case Some("xxhash64") => Dedup.XxHash
-        case Some(other) => throw new IllegalArgumentException(
-          s"near-dup index tagged with unknown hash family: $other")
-        case None => Dedup.Md5Hash
-      }
-    val sBands = Dedup.bandedLong(docs, id, text, n, bands, rows, Some(hh))
+      .map(_.metadata.getString(HashFamilyMetaKey))
+      .filter(_ != "md5")
+      .foreach(other => throw new IllegalArgumentException(
+        s"near-dup index tagged with hash family $other; only md5 is supported"))
+    val sBands = Dedup.bandedLong(docs, id, text, n, bands, rows)
     sBands.join(corpusBands, Seq("_bidx", "_bkey"))
       .filter(col("_id") =!= col("_cid"))
       .filter(round(size(array_intersect(col("_sh"), col("_csh"))).cast("double")

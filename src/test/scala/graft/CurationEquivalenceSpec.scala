@@ -1,11 +1,7 @@
 package graft
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Dedup
 import graft.functions.DetMath
@@ -83,22 +79,10 @@ class CurationEquivalenceSpec extends AnyFunSuite {
 
   // ---- reference -------------------------------------------------------
 
-  private def hex(bytes: Array[Byte]): String = bytes.map(b => f"${b & 0xff}%02x").mkString
-
-  private def digest(alg: String, s: String): String =
-    hex(MessageDigest.getInstance(alg).digest(s.getBytes("UTF-8")))
-
-  /** A custom family: neither md5 nor xxhash64, so Dedup keeps its
-    * declarative band-key form for it. */
-  private val Sha1Hash: (Int, Column) => Column =
-    (i, s) => substring(sha1(concat(lit(s"$i~"), s)), 1, 10)
-
-  /** (name, Spark family, the same family as plain Scala). */
-  private val families: Seq[(String, (Int, Column) => Column, (Int, String) => String)] = Seq(
-    ("md5", Dedup.Md5Hash, (i, s) => digest("MD5", s"$i#$s").take(8)),
-    ("xxhash64", Dedup.XxHash, (i, s) => f"${XxHash64Function.hash(UTF8String.fromString(s),
-      StringType, XxHash64Function.hash(i, IntegerType, 42L))}%016x"),
-    ("custom sha1", Sha1Hash, (i, s) => digest("SHA-1", s"$i~$s").take(10)))
+  /** hashᵢ(s): the first 8 hex chars of md5("i#" ∥ s). */
+  private def md5Hash(i: Int, s: String): String =
+    MessageDigest.getInstance("MD5").digest(s"$i#$s".getBytes("UTF-8"))
+      .take(4).map(b => f"${b & 0xff}%02x").mkString
 
   private def shingleSet(text: String): Seq[String] =
     if (text == null) Seq.empty
@@ -107,17 +91,17 @@ class CurationEquivalenceSpec extends AnyFunSuite {
       if (w.length < N) Seq.empty else w.sliding(N).map(_.mkString(" ")).toSeq.distinct
     }
 
-  private def bandKeys(sh: Seq[String], h: (Int, String) => String): Seq[(Int, String)] =
+  private def bandKeys(sh: Seq[String]): Seq[(Int, String)] =
     if (sh.isEmpty) Seq.empty
     else (0 until Bands).map { b =>
-      b -> (0 until Rows).map(r => sh.map(s => h(b * Rows + r, s)).min).mkString(":")
+      b -> (0 until Rows).map(r => sh.map(s => md5Hash(b * Rows + r, s)).min).mkString(":")
     }
 
   /** Per-band buckets, every bucket's pairs unioned. */
   private def refCandidates(left: Seq[(Long, String)], right: Seq[(Long, String)],
-      h: (Int, String) => String, self: Boolean): Set[(Long, Long)] = {
+      self: Boolean): Set[(Long, Long)] = {
     def buckets(d: Seq[(Long, String)]) =
-      d.flatMap { case (id, t) => bandKeys(shingleSet(t), h).map(_ -> id) }
+      d.flatMap { case (id, t) => bandKeys(shingleSet(t)).map(_ -> id) }
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val r = buckets(right)
     buckets(left).toSeq.flatMap { case (k, ids1) =>
@@ -147,37 +131,32 @@ class CurationEquivalenceSpec extends AnyFunSuite {
 
   // ---- LSH -------------------------------------------------------------
 
-  for ((name, fam, ref) <- families) {
-    test(s"minhashCandidates and minhashLsh equal the per-band brute force ($name)") {
-      val cands = refCandidates(leftDocs, leftDocs, ref, self = true)
-      // the hot key alone yields C(32, 2) candidates, all verified at 1.0
-      assert(cands.count { case (a, b) => a >= 100 && b < 132 } == 32 * 31 / 2)
-      assert(pairs(Dedup.minhashCandidates(frame(leftDocs), "doc_id", "text",
-        N, Bands, Rows, Some(fam))) == cands.toSeq.sorted)
-      val want = refVerified(cands, leftDocs, leftDocs)
-      assert(want.exists(_._3 < 1.0) && cands.size > want.size,
-        "inputs must exercise both a near pair and a rejected candidate")
-      assert(triples(Dedup.minhashLsh(frame(leftDocs), "doc_id", "text",
-        N, Bands, Rows, Threshold, Some(fam))) == want)
-    }
+  test("minhashCandidates and minhashLsh equal the per-band brute force (md5)") {
+    val cands = refCandidates(leftDocs, leftDocs, self = true)
+    // the hot key alone yields C(32, 2) candidates, all verified at 1.0
+    assert(cands.count { case (a, b) => a >= 100 && b < 132 } == 32 * 31 / 2)
+    assert(pairs(Dedup.minhashCandidates(frame(leftDocs), "doc_id", "text",
+      N, Bands, Rows)) == cands.toSeq.sorted)
+    val want = refVerified(cands, leftDocs, leftDocs)
+    assert(want.exists(_._3 < 1.0) && cands.size > want.size,
+      "inputs must exercise both a near pair and a rejected candidate")
+    assert(triples(Dedup.minhashLsh(frame(leftDocs), "doc_id", "text",
+      N, Bands, Rows, Threshold)) == want)
+  }
 
-    test(s"minhashLshAgainst equals the cross-corpus brute force ($name)") {
-      val cands = refCandidates(leftDocs, rightDocs, ref, self = false)
-      val want = refVerified(cands, leftDocs, rightDocs)
-      assert(want.exists(_._1 >= 100) && want.exists(_._1 == 1L))
-      assert(triples(Dedup.minhashLshAgainst(frame(leftDocs), frame(rightDocs), "doc_id",
-        "text", N, Bands, Rows, Threshold, Some(fam))) == want)
-    }
+  test("minhashLshAgainst equals the cross-corpus brute force (md5)") {
+    val cands = refCandidates(leftDocs, rightDocs, self = false)
+    val want = refVerified(cands, leftDocs, rightDocs)
+    assert(want.exists(_._1 >= 100) && want.exists(_._1 == 1L))
+    assert(triples(Dedup.minhashLshAgainst(frame(leftDocs), frame(rightDocs), "doc_id",
+      "text", N, Bands, Rows, Threshold)) == want)
+  }
 
-    test(s"LSH operators return empty frames on empty input ($name)") {
-      assert(Dedup.minhashCandidates(emptyFrame, "doc_id", "text", hashHex = Some(fam))
-        .isEmpty)
-      assert(Dedup.minhashLsh(emptyFrame, "doc_id", "text", hashHex = Some(fam)).isEmpty)
-      assert(Dedup.minhashLshAgainst(emptyFrame, frame(rightDocs), "doc_id", "text",
-        hashHex = Some(fam)).isEmpty)
-      assert(Dedup.minhashLshAgainst(frame(leftDocs), emptyFrame, "doc_id", "text",
-        hashHex = Some(fam)).isEmpty)
-    }
+  test("LSH operators return empty frames on empty input (md5)") {
+    assert(Dedup.minhashCandidates(emptyFrame, "doc_id", "text").isEmpty)
+    assert(Dedup.minhashLsh(emptyFrame, "doc_id", "text").isEmpty)
+    assert(Dedup.minhashLshAgainst(emptyFrame, frame(rightDocs), "doc_id", "text").isEmpty)
+    assert(Dedup.minhashLshAgainst(frame(leftDocs), emptyFrame, "doc_id", "text").isEmpty)
   }
 
   // ---- contamination ---------------------------------------------------

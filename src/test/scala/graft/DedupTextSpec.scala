@@ -65,16 +65,6 @@ class DedupTextSpec extends AnyFunSuite {
     assert(sh == Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
-  test("minhash hash families (md5 oracle-parity vs xxhash64 scale) agree on planted dups") {
-    val d = Tables.documents(spark, sf)
-    val md5Pairs = Dedup.minhashLsh(d, "doc_id", "text", hashHex = Some(Dedup.Md5Hash))
-      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val xxPairs = Dedup.minhashLsh(d, "doc_id", "text", hashHex = Some(Dedup.XxHash))
-      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(md5Pairs == xxPairs, s"md5=${md5Pairs.size} xx=${xxPairs.size}")
-    assert(md5Pairs.nonEmpty)
-  }
-
   test("langid picks the profile with most stopword hits") {
     val spark2 = spark
     import spark2.implicits._

@@ -15,6 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ann_pq_fit (KMeans init samples per-partition) are float-iterative
   * by nature; cluster_max_bipartite would pass but shares the
   * rows-only gate, so it stays with its property spec.
+  *
+  * The same sweep is the registry's "every query returns rows" check:
+  * each oracled query must return rows, and the rows-only queries run
+  * once, through the `SparkEntry.queries` closures a driver calls.
   */
 class InvarianceSpec extends AnyFunSuite {
   import TestSpark._
@@ -30,8 +34,13 @@ class InvarianceSpec extends AnyFunSuite {
       val h3 = hashAt(d, 3)
       val h7 = hashAt(d, 7)
       if (h3 != h7) failures += s"${d.name}: 3-part $h3 != 7-part $h7"
+      if (h3._2 == 0) failures += s"${d.name} returned 0 rows"
     }
     spark.conf.set("spark.sql.shuffle.partitions", "4")
+    for (d <- SparkEntry.registry.filter(_.oracle.isEmpty)) {
+      val rows = try SparkEntry.queries(d.name)(spark, sf).count() finally Harness.clear(spark)
+      if (rows == 0) failures += s"${d.name} returned 0 rows"
+    }
     assert(failures.isEmpty, failures.mkString("; "))
   }
 }

@@ -9,8 +9,7 @@ import graft.streaming.Streams
   *    column metadata, through a parquet or bucketed-table roundtrip;
   *  - the shingle kernel drops windows containing null words (the old
   *    declarative chain's law) instead of emitting short shingles;
-  *  - the xxhash64 band-key kernel (now with memoized per-band seeds)
-  *    still equals the declarative composition bit-for-bit.
+  *  - an index tagged with a family other than md5 is rejected.
   */
 class Round10Spec extends AnyFunSuite {
   import TestSpark._
@@ -135,27 +134,26 @@ class Round10Spec extends AnyFunSuite {
       "auto-chunked result must be identical to the unchunked result")
   }
 
-  test("xxhash64 band-key kernel equals the declarative composition (seed memoization)") {
+  test("nearDupStreamIndexed rejects an index tagged xxhash64; an untagged index is md5") {
+    import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
     val spark2 = spark
     import spark2.implicits._
-    val bands = 4; val rows = 3
-    val docs = Seq.tabulate(20)(i =>
-      (i.toLong, (0 to 10).map(j => s"tok${(i * 7 + j * 3) % 13}").mkString(" ")))
-      .toDF("id", "text")
-    val sh = docs.select(col("id"),
-      graft.functions.minhash.wordShingles(split(col("text"), " "), 3).as("_sh"))
-    val kernel = sh.select(col("id"),
-      posexplode(graft.functions.minhash.bandKeys(col("_sh"), bands, rows,
-        md5Family = false)).as(Seq("b", "k")))
-    val declarative = sh.filter(size(col("_sh")) > 0).select(col("id"),
-      posexplode(array((0 until bands).map { b =>
-        concat_ws(":", (0 until rows).map { r =>
-          array_min(transform(col("_sh"),
-            s => format_string("%016x", xxhash64(lit(b * rows + r), s))))
-        }: _*)
-      }: _*)).as(Seq("b", "k")))
-    assert(kernel.exceptAll(declarative).isEmpty && declarative.exceptAll(kernel).isEmpty,
-      "kernel and declarative xxhash64 band keys must be bit-identical")
+    def toks(p: String) = (1 to 30).map(i => s"$p$i").mkString(" ")
+    val corpus = Seq((100L, toks("w"))).toDF("doc_id", "text")
+    val docs = Seq((1L, "x0 x1 " + toks("w"))).toDF("doc_id", "text")
+    val index = Streams.nearDupIndex(corpus, "doc_id", "text")
+    try {
+      def retag(meta: Metadata) = index.select(index.columns.toSeq.map(c =>
+        if (c == "_bkey") col(c).as(c, meta) else col(c)): _*)
+      val xx = retag(new MetadataBuilder().putString("graft.hashFamily", "xxhash64").build())
+      val e = intercept[IllegalArgumentException](
+        Streams.nearDupStreamIndexed(docs, xx, "doc_id", "text"))
+      assert(e.getMessage.contains("xxhash64"))
+      val untagged = retag(Metadata.empty)
+      assert(untagged.schema("_bkey").metadata == Metadata.empty)
+      assert(Streams.nearDupStreamIndexed(docs, untagged, "doc_id", "text")
+        .as[Long].collect().toSeq == Seq(1L))
+    } finally index.unpersist(false)
   }
 
   test("bucketed on-disk near-dup index: tag survives saveAsTable; micro-batch " +

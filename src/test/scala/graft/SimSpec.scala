@@ -45,13 +45,6 @@ class SimSpec extends AnyFunSuite {
     assert(rows(1).getDouble(1) == 0.0)
   }
 
-  test("queries run at sf0.001 and return rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned 0 rows")
-    }
-  }
-
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
